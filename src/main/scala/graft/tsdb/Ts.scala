@@ -494,9 +494,11 @@ object Ts {
   def mergeRollup(chunks: DataFrame, seriesCols: Seq[String], path: String,
                   bucketSec: Long = 900, fixedScale: Double = FixedScale): Unit = {
     val spark = chunks.sparkSession
+    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fresh = rollupPartials(chunks, seriesCols, bucketSec, fixedScale)
     val merged =
-      if (!new java.io.File(path, "_SUCCESS").exists) fresh
+      if (!fs.exists(marker)) fresh
       else {
         val cols = fresh.columns
         val touched = fresh.select("bucket_date").distinct()
@@ -528,8 +530,7 @@ object Ts {
     // commit — closing it needs an atomic multi-partition commit (a
     // transactional table format), so a mid-commit crash should
     // rebuild the touched dates from chunks (upsertRollup) instead
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(path, "_SUCCESS"), Array.emptyByteArray)
+    fs.create(marker, true).close()
   }
 
   /** Open a rollup; `fromSec`/`toSec` prune partitions at plan time. */
@@ -650,16 +651,13 @@ object Ts {
     // chunk's START date, and a [[chunkifyAdaptive]] store's windows
     // stretch to days — a candidate partition can hold chunks whose
     // max_ts reaches AT OR PAST the cutoff midnight, i.e. live points.
-    // One stat-column scan over just the candidate partitions (chunk
+    // One stat-column pass over just the candidate partitions (chunk
     // payload bytes never read) finds those; they survive the drop.
     // On fixed-2-h stores (windows never straddle midnight) the guard
     // never fires and behavior is identical to the plain date drop.
-    val live = spark.read.option("basePath", path)
-      .parquet(candidates.map(_.getPath.toString).toSeq: _*)
-      .groupBy("window_date").agg(max("max_ts").as("__mx"))
-      .filter(col("__mx") >= cutoffSec)
-      .select(col("window_date").cast("string"))
-      .collect().map(_.getString(0)).toSet
+    val live = dateSpans(spark.read.option("basePath", path)
+        .parquet(candidates.map(_.getPath.toString).toSeq: _*))
+      .collect { case (d, (_, hi)) if hi >= cutoffSec => d }.toSet
     candidates.foreach { st =>
       val d = st.getPath.getName.stripPrefix("window_date=")
       if (!live.contains(d)) fs.delete(st.getPath, true)
@@ -695,28 +693,29 @@ object Ts {
    *   - fully covered (min_ts >= from && max_ts <= to): dropped
    *     without ever reading the payload;
    *   - straddling (at most the two boundary windows per series):
-   *     decoded, point-filtered, re-encoded by the same sort-based
-   *     deterministic chunkify — so surviving straddle chunks are
-   *     byte-identical to chunkifying the surviving points directly,
-   *     and the one-chunk-per-(series, window) invariant holds.
+   *     decoded, point-filtered, and re-encoded in their OWN
+   *     (series, window_start) by the same sort-based deterministic
+   *     encode — so a straddler never moves to another window or
+   *     date, whatever window size the store was built with
+   *     ([[chunkifyAdaptive]]'s multi-day windows included), and on a
+   *     fixed 2-h store the surviving chunk is byte-identical to
+   *     chunkifying the surviving points directly.
    * This is retention finer than [[expireStore]]'s partition drops
    * (GDPR-style erasure, bad-ingest rollback) as one linear pass.
    */
   def deleteRange(chunks: DataFrame, seriesCols: Seq[String],
-                  fromSec: Long, toSec: Long,
-                  windowSec: Long = WindowSec): DataFrame = {
+                  fromSec: Long, toSec: Long): DataFrame = {
     val untouched = chunks.filter(
       col("max_ts") < fromSec || col("min_ts") > toSec)
     val straddling = chunks.filter(
       !(col("max_ts") < fromSec || col("min_ts") > toSec) &&
       !(col("min_ts") >= fromSec && col("max_ts") <= toSec))
-    val survivors = unpack(straddling, seriesCols)
-      .filter(col("ts") < fromSec || col("ts") > toSec)
-      // ts comes back as epoch seconds; go through timestamp so
-      // chunkify's epochSec treats it as seconds (same as compactStore)
-      .withColumn("ts", to_timestamp(col("ts")))
-    untouched.unionByName(
-      chunkify(survivors, seriesCols, "ts", "v", windowSec))
+    val keyCols = seriesCols :+ "window_start"
+    val survivors = straddling
+      .select(keyCols.map(col) :+ explode(gorilla_decode(col("chunk"))).as("__p"): _*)
+      .select(keyCols.map(col) :+ col("__p.ts").as("__sec") :+ col("__p.v").as("__v"): _*)
+      .filter(col("__sec") < fromSec || col("__sec") > toSec)
+    untouched.unionByName(encodeSorted(survivors, keyCols, leadTrail = false))
   }
 
   /**
@@ -742,20 +741,35 @@ object Ts {
   def upsertPoints(chunks: DataFrame, late: DataFrame, seriesCols: Seq[String],
                    tsCol: String, valCol: String,
                    windowSec: Long = WindowSec): DataFrame = {
-    val pts = late.select(seriesCols.map(col) :+
+    val pts = latePoints(late, seriesCols, tsCol, valCol)
+    mergeLate(chunks, pts, windowKeys(pts, seriesCols, windowSec).distinct(),
+      seriesCols, windowSec)
+  }
+
+  /** A late batch as (seriesCols*, ts epoch seconds, v double). */
+  private def latePoints(late: DataFrame, seriesCols: Seq[String],
+                         tsCol: String, valCol: String): DataFrame =
+    late.select(seriesCols.map(col) :+
       epochSec(late, tsCol).as("ts") :+
       col(valCol).cast("double").as("v"): _*)
-    val keys = pts.select(seriesCols.map(col) :+
-        (floor(col("ts") / windowSec) * windowSec).cast("long")
-          .as("window_start"): _*)
-      .distinct()
+
+  /** Each late point's (seriesCols*, window_start) routing key. */
+  private def windowKeys(pts: DataFrame, seriesCols: Seq[String],
+                         windowSec: Long): DataFrame =
+    pts.select(seriesCols.map(col) :+
+      (floor(col("ts") / windowSec) * windowSec).cast("long").as("window_start"): _*)
+
+  /** The [[upsertPoints]] merge, routed by the batch's distinct
+    * (seriesCols*, window_start) `keys`. */
+  private def mergeLate(chunks: DataFrame, pts: DataFrame, keys: DataFrame,
+                        seriesCols: Seq[String], windowSec: Long): DataFrame = {
     val joinCols = seriesCols :+ "window_start"
     val untouched = chunks.join(broadcast(keys), joinCols, "left_anti")
     val touched = chunks.join(broadcast(keys), joinCols, "left_semi")
     val merged = unpack(touched, seriesCols)
       .unionByName(pts)
       // ts is epoch seconds here; through timestamp so chunkify's
-      // epochSec reads it as seconds (same as deleteRange/compactStore)
+      // epochSec reads it as seconds (same as compactStore)
       .withColumn("ts", to_timestamp(col("ts")))
     untouched.unionByName(chunkify(merged, seriesCols, "ts", "v", windowSec))
   }
@@ -763,13 +777,17 @@ object Ts {
   /**
    * In-place late-data upsert on a PERSISTED store — [[upsertPoints]]
    * routed by the partition layout: only the `window_date` partitions
-   * the late batch lands in are read (a bounded one-row-per-date
-   * collect picks them), merged, and written back via dynamic
-   * partition overwrite; every other date is never listed, read, or
+   * the late batch lands in are read, merged, and written back via
+   * dynamic partition overwrite; every other date is never read or
    * rewritten. New dates the store has never seen appear as fresh
-   * partitions. No horizon marker is needed (unlike
-   * [[deleteFromStore]]): an upsert only ADDS chunks, so the
-   * chunk-derived ingest horizon can only rise.
+   * partitions. The batch's distinct (series, window_start) keys are
+   * collected once, in one shuffle-free job (each task dedupes its
+   * own rows), and come back as a local relation: the touched dates
+   * derive from it with the partition column's own expression, and
+   * the merge broadcasts it, neither running a job of its own. No
+   * horizon marker is needed (unlike [[deleteFromStore]]): an upsert
+   * only ADDS chunks, so the chunk-derived ingest horizon can only
+   * rise.
    */
   def upsertIntoStore(spark: org.apache.spark.sql.SparkSession, path: String,
                       late: DataFrame, seriesCols: Seq[String],
@@ -781,20 +799,20 @@ object Ts {
       writeStore(chunkify(late, seriesCols, tsCol, valCol, windowSec), path)
       return
     }
-    val pts = late.select(seriesCols.map(col) :+
-      epochSec(late, tsCol).as("__sec"): _*)
-    val touchedDates = pts
-      .select(to_date(to_timestamp(
-        (floor(col("__sec") / windowSec) * windowSec).cast("long")))
-        .cast("string").as("d"))
-      .distinct().collect().map(_.getString(0)).toSeq
+    val pts = latePoints(late, seriesCols, tsCol, valCol)
+    val keyed = windowKeys(pts, seriesCols, windowSec)
+    val keyRows = keyed
+      .mapPartitions(_.toSet.iterator)(org.apache.spark.sql.Encoders.row(keyed.schema))
+      .collect().distinct
+    val keys = spark.createDataFrame(java.util.Arrays.asList(keyRows: _*), keyed.schema)
+    val touchedDates = keys
+      .select(to_date(to_timestamp(col("window_start"))).cast("string"))
+      .collect().map(_.getString(0)).distinct.toSeq
     if (touchedDates.isEmpty) return
     val existing = spark.read.parquet(path)
       .filter(col("window_date").cast("string").isin(touchedDates: _*))
       .drop("window_date")
-    val merged = upsertPoints(existing, late, seriesCols, tsCol, valCol,
-      windowSec)
-    upsertStore(merged, path)
+    upsertStore(mergeLate(existing, pts, keys, seriesCols, windowSec), path)
   }
 
   /**
@@ -807,26 +825,32 @@ object Ts {
    *      untouched chunks through unread and decode only straddlers;
    *   3. the surviving boundary chunks write back via dynamic
    *      partition overwrite — dates outside the range are never
-   *      listed, read, or rewritten.
-   * A boundary date left with zero chunks is removed explicitly:
-   * dynamic overwrite cannot delete a partition it writes no rows to.
+   *      read or rewritten.
+   * Every boundary date keeps at least one chunk, so the overwrite
+   * replaces each one: the chunk holding its earliest or latest point
+   * lies outside the range, and it survives either untouched or as a
+   * straddler, which keeps that point and is re-encoded in its own
+   * window, hence in its own date.
    *
    * Partition classification is METADATA-VERIFIED, not inferred from
    * day arithmetic: a partition is directory-deleted only when its
    * actual per-partition (min(min_ts), max(max_ts)) lies inside
-   * [fromSec, toSec]. Day arithmetic (`dayStart + 86400 + windowSec`)
-   * would silently lose data on a store whose chunks outlive the
-   * assumed window — chunkifyAdaptive windows run up to 365 days, and
-   * a caller can pass a windowSec the store was not built with. The
-   * stats pass reads two long columns of the candidate partitions
-   * (header-sized vs the payload bytes it saves from a wrong delete);
-   * `window_date > date(toSec)` partitions are pruned from it for
-   * free because min_ts >= window_start >= its partition's day start
-   * holds in every layout.
+   * [fromSec, toSec]. Day arithmetic would silently lose data on a
+   * store whose chunks outlive an assumed window — chunkifyAdaptive
+   * windows run up to 365 days. The stats pass reads two long columns
+   * of the candidate partitions (header-sized vs the payload bytes it
+   * saves from a wrong delete); `window_date > date(toSec)` partitions
+   * are pruned from it for free because min_ts >= window_start >= its
+   * partition's day start holds in every layout.
+   *
+   * The store is opened ONCE: the stats pass, the series columns, the
+   * horizon marker and the boundary rewrite all share one frame. Its
+   * file listing is a snapshot, which is safe here — the covered
+   * partitions deleted before the rewrite are pruned out of it by the
+   * boundary-date filter, and the `_graft_horizon` marker is hidden.
    */
   def deleteFromStore(spark: org.apache.spark.sql.SparkSession, path: String,
-                      fromSec: Long, toSec: Long,
-                      windowSec: Long = WindowSec): Unit = {
+                      fromSec: Long, toSec: Long): Unit = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return
@@ -836,25 +860,16 @@ object Ts {
     def dayStart(d: String) = java.time.LocalDate.parse(d).toEpochDay * 86400L
     val candidates = dates.filter(d => dayStart(d) <= toSec)
     if (candidates.isEmpty) return
-    // true span of each candidate partition from chunk-header stats
-    // (bounded collect: one row per partition date, like the
-    // boundary-date sets elsewhere in this file)
-    val span = spark.read.parquet(path)
-      .filter(col("window_date").cast("string").isin(candidates: _*))
-      .groupBy(col("window_date").cast("string").as("d"))
-      .agg(min("min_ts").as("pmin"), max("max_ts").as("pmax"))
-      .collect()
-    val overlapping = span.filter(r => r.getLong(1) <= toSec && r.getLong(2) >= fromSec)
+    val store = spark.read.parquet(path)
+    def onDates(ds: Seq[String]) =
+      store.filter(col("window_date").cast("string").isin(ds: _*))
+    val overlapping = dateSpans(onDates(candidates))
+      .filter { case (_, (lo, hi)) => lo <= toSec && hi >= fromSec }
     if (overlapping.isEmpty) return
     val covered = overlapping
-      .filter(r => r.getLong(1) >= fromSec && r.getLong(2) <= toSec)
-      .map(_.getString(0)).toSeq
-    val boundary = overlapping.map(_.getString(0)).toSeq.diff(covered)
-    val fixed = Set("window_start", "n", "min_ts", "max_ts", "min_v", "max_v",
-      "sum_cents", "sumsq_cents", "chunk", "window_date",
-      "batch_id") // write provenance (streamed idempotent appends), never a series label
-    val seriesCols = spark.read.parquet(path).columns
-      .filterNot(fixed.contains).toSeq
+      .collect { case (d, (lo, hi)) if lo >= fromSec && hi <= toSec => d }.toSeq
+    val boundary = overlapping.keys.toSeq.diff(covered)
+    val seriesCols = storeSeriesCols(store)
     // BEFORE any bytes are deleted: persist each touched series'
     // pre-delete ingest horizon, merged with any prior marker. The
     // chunk-derived horizon drops when a series' newest chunks die
@@ -863,23 +878,44 @@ object Ts {
     // timestamp was still INGESTED once — a replay of it must drop,
     // not resurrect). Stats-only scan of just the touched partitions;
     // untouched series keep their horizon via the surviving chunks.
-    persistHorizon(spark, path, overlapping.map(_.getString(0)).toSeq, seriesCols)
+    persistHorizon(spark, path, onDates(overlapping.keys.toSeq), seriesCols)
     covered.foreach(d =>
       fs.delete(new org.apache.hadoop.fs.Path(root, s"window_date=$d"), true))
-    if (boundary.isEmpty) return
-    val aff = spark.read.parquet(path)
-      .filter(col("window_date").cast("string").isin(boundary: _*))
-    val out = deleteRange(aff.drop("window_date"), seriesCols,
-        fromSec, toSec, windowSec)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      upsertStore(out, path)
-      val kept = out
-        .select(to_date(to_timestamp(col("window_start"))).cast("string").as("d"))
-        .distinct().collect().map(_.getString(0)).toSet
-      boundary.filterNot(kept).foreach(d =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"window_date=$d"), true))
-    } finally out.unpersist()
+    if (boundary.nonEmpty)
+      upsertStore(deleteRange(onDates(boundary).drop("window_date"), seriesCols,
+        fromSec, toSec), path)
+  }
+
+  /** Per-date (min(min_ts), max(max_ts)) of a store frame, from the
+    * chunk headers alone and in one shuffle-free job: each task folds
+    * its rows by `window_date`, and the driver merges the partials —
+    * at most dates × tasks rows ever leave the executors. */
+  private def dateSpans(store: DataFrame): Map[String, (Long, Long)] = {
+    import org.apache.spark.sql.Encoders
+    store.select(col("window_date").cast("string"), col("min_ts"), col("max_ts"))
+      .mapPartitions { rows =>
+        val acc = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
+        rows.foreach { r =>
+          val (lo, hi) = (r.getLong(1), r.getLong(2))
+          acc(r.getString(0)) = acc.get(r.getString(0)) match {
+            case Some((a, b)) => (math.min(a, lo), math.max(b, hi))
+            case None => (lo, hi)
+          }
+        }
+        acc.iterator.map { case (d, (lo, hi)) => (d, lo, hi) }
+      }(Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.scalaLong))
+      .collect()
+      .groupMapReduce(_._1)(t => (t._2, t._3))((a, b) =>
+        (math.min(a._1, b._1), math.max(a._2, b._2)))
+  }
+
+  /** A store's series label columns: everything but the chunk header,
+    * payload and partition columns. */
+  private def storeSeriesCols(store: DataFrame): Seq[String] = {
+    val fixed = Set("window_start", "n", "min_ts", "max_ts", "min_v", "max_v",
+      "sum_cents", "sumsq_cents", "chunk", "window_date",
+      "batch_id") // write provenance (streamed idempotent appends), never a series label
+    store.columns.filterNot(fixed.contains).toSeq
   }
 
   /** `_`-prefixed so parquet readers of the store skip it as hidden. */
@@ -890,10 +926,9 @@ object Ts {
     * merge READS the current marker; the frame is one row per touched
     * series (distributed write — never collected). */
   private def persistHorizon(spark: org.apache.spark.sql.SparkSession,
-                             path: String, touchedDates: Seq[String],
+                             path: String, touched: DataFrame,
                              seriesCols: Seq[String]): Unit = {
-    val fresh = spark.read.parquet(path)
-      .filter(col("window_date").cast("string").isin(touchedDates: _*))
+    val fresh = touched
       .groupBy(seriesCols.map(col): _*)
       .agg(max("max_ts").as("horizon_ts"))
     val merged = storeHorizon(spark, path) match {
@@ -954,10 +989,7 @@ object Ts {
   def compactStore(spark: org.apache.spark.sql.SparkSession, path: String,
                    outPath: String, windowSec: Long = WindowSec): Unit = {
     val chunks = readStore(spark, path)
-    val fixed = Set("window_start", "n", "min_ts", "max_ts", "min_v", "max_v",
-      "sum_cents", "sumsq_cents", "chunk", "window_date",
-      "batch_id") // write provenance (streamed idempotent appends), never a series label
-    val seriesCols = chunks.columns.filterNot(fixed.contains).toSeq
+    val seriesCols = storeSeriesCols(chunks)
     // ts comes back as epoch seconds (long); go through timestamp so
     // chunkify's epochSec treats it as seconds, not parquet nanos
     val pts = unpack(chunks, seriesCols).withColumn("ts", to_timestamp(col("ts")))

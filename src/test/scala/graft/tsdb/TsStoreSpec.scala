@@ -274,6 +274,69 @@ class TsStoreSpec extends AnyFunSuite {
       s"mismatched-windowSec delete lost ${expect.size - got.size} points")
   }
 
+  test("deleteFromStore keeps other series' dates when it cuts a multi-day adaptive chunk") {
+    import spark.implicits._
+    // a dense 10 s series over 3 days (2-h adaptive windows) and a
+    // sparse 30-point series that chunkifyAdaptive packs into ONE chunk
+    // spanning all 3 days: deleting an hour on day 1 makes that chunk a
+    // straddler whose survivors reach days 2 and 3, where only the
+    // dense series' chunks live
+    val d0 = 1704067200L // 2024-01-01T00:00Z
+    val raw = (0 until 25920).map(i => ("dense", d0 + 10L * i, (i % 97).toDouble)) ++
+      (0 until 30).map(i => ("sparse", d0 + 8640L * i, i.toDouble))
+    val pts = raw.map { case (k, t, v) => (k, new java.sql.Timestamp(t * 1000L), v) }
+      .toDF("series", "ts", "value")
+    val path = java.nio.file.Files.createTempDirectory("graft-del-adaptive").toString
+    Ts.writeStore(Ts.chunkifyAdaptive(pts, Seq("series"), "ts", "value"), path)
+    assert(Ts.readStore(spark, path).filter(col("series") === "sparse").count() == 1L)
+    val from = d0 + 7 * 3600L
+    val to = from + 3600L
+    Ts.deleteFromStore(spark, path, from, to)
+    val kept = raw.filter { case (_, t, _) => t < from || t > to }
+    val got = Ts.unpack(Ts.readStore(spark, path), Seq("series"))
+    val counts = got.groupBy("series").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(counts == kept.groupBy(_._1).map { case (k, v) => k -> v.size.toLong },
+      s"per-series point counts after the delete: $counts")
+    assert(got.orderBy("series", "ts").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq == kept.sorted)
+  }
+
+  test("store mutations stay within their Spark job budget") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val ev = spark.read.parquet(s"$dir/events.parquet")
+    val series = Seq("user_id", "event_type")
+    val path = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    Ts.writeStore(Ts.chunkify(ev, series, "ts", "value"), path)
+    val sec = Ts.epochSec(ev, "ts")
+    val late = ev.filter(sec >= 1704844800L && sec <= 1704844800L + 86400L)
+      .select(col("user_id"), col("event_type"),
+        to_timestamp(sec + 1800L).as("ts"), col("value").as("v"))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.SpecBus.drain(sc)
+      jobs.set(0)
+      body
+      org.apache.spark.SpecBus.drain(sc)
+      jobs.get
+    }
+    sc.addSparkListener(listener)
+    try {
+      val upsert = jobsOf(Ts.upsertIntoStore(spark, path, late, series, "ts", "v"))
+      // 2024-01-10T12:00 .. 2024-01-13T06:00: two covered dates, two boundary dates
+      val delete = jobsOf(Ts.deleteFromStore(spark, path, 1704844800L + 43200L,
+        1705104000L + 21600L))
+      val expire = jobsOf(Ts.expireStore(spark, path, olderThanDays = 1,
+        asOfSec = 1705017600L))
+      assert((upsert, delete, expire) == ((6, 7, 2)),
+        s"jobs per (upsert, delete, expire)")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("latest() is exact on a fragmented store (several chunks per window)") {
     val ev = spark.read.parquet(s"$dir/events.parquet")
     val series = Seq("user_id", "event_type")
@@ -417,6 +480,24 @@ class TsStoreSpec extends AnyFunSuite {
     val merged = Ts.readRollup(spark, path)
       .filter(col("bucket") === w0 + 900).select("n").collect()
     assert(merged.map(_.getLong(0)).toSeq == Seq(4L))
+  }
+
+  test("mergeRollup folds into a store named by a file:// URI") {
+    import spark.implicits._
+    // the _SUCCESS check and write go through the Hadoop FileSystem, so
+    // a scheme-qualified path (as on HDFS or an object store) sees the
+    // first fold and merges the second into it
+    val d0 = 1704067200L // 2024-01-01T00:00Z: 20 h of 1-min points, one date
+    val pts = (0 until 1200).map(i => ("a", (d0 + 60L * i) * 1000000000L, i.toDouble))
+    val path = java.nio.file.Files.createTempDirectory("graft-rollup-uri")
+      .resolve("rollup").toUri.toString
+    assert(path.startsWith("file:"))
+    for (fold <- pts.grouped(600))
+      Ts.mergeRollup(Ts.chunkify(fold.toDF("k", "ts", "value"), Seq("k"), "ts", "value"),
+        Seq("k"), path)
+    val rollup = Ts.readRollup(spark, path)
+    assert(rollup.agg(sum("n")).first().getLong(0) == 1200L)
+    assert(rollup.count() == 80L) // 1200 min / 15-min buckets, each merged once
   }
 
   test("compressed-domain range aggregate matches the decode-everything baseline") {
