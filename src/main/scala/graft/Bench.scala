@@ -217,9 +217,9 @@ object Bench {
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
     catch { case _: Throwable => () }
     // the same map as a COMMITTED per-round artifact (BENCH_FULL.json,
-    // alongside RECALL.json): once the compact stdout line crosses the
-    // tail budget it degrades to deciseconds, so the repo file is the
-    // durable exact record round-over-round diffs read. sf0.1 ONLY:
+    // alongside RECALL.json): the stdout line carries only the slowest
+    // keys that fit its tail budget, so the repo file is the durable
+    // exact record round-over-round diffs read. sf0.1 ONLY:
     // twice now a small-SF smoke run clobbered the committed sf0.1
     // record (restored by hand in r15 and r16) — the graded artifact
     // is pinned to its scale, smoke runs keep bench_out.json
@@ -227,10 +227,6 @@ object Bench {
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get("/root/repo/BENCH_FULL.json"), json + "\n")
       catch { case _: Throwable => () }
-    // next-to-last line: the compact trie-grouped encoding (full map,
-    // lossless, for any consumer that decodes its declared pipeline).
-    val compact = compactLine(results, total, new java.io.File(sfDir).getName)
-    println(compact)
     // LAST line (r19 contract fix): flat, UN-ENCODED JSON the driver's
     // last-JSON-line parse actually consumes. PERF_r17/r18 proved the
     // compact tiers are never decoded by the consumer — three rounds
@@ -240,8 +236,7 @@ object Bench {
     // control_ratio/sf plus as many per-query entries as fit,
     // SLOWEST-FIRST (a partial map the driver reads beats a complete
     // one it doesn't); the full-precision full map rides
-    // bench_out.json + the committed BENCH_FULL.json + the compact
-    // line above.
+    // bench_out.json + the committed BENCH_FULL.json.
     println(driverLine(results, total, controlRatio, sfDir))
     // the bench deliberately does NOT release query-scoped caches
     // between queries: reps of one query must reuse its persisted
@@ -282,189 +277,5 @@ object Bench {
       }
     }
     sb.append(tail).toString
-  }
-
-  /** Trie-grouped compact bench line; falls back to deciseconds in the
-    * (pathological) case centiseconds still exceed the tail budget.
-    *
-    * The per-query payload is a parenthesis-packed STRING, not nested
-    * JSON objects: at 140 queries the name bytes alone are ~1.2k, and
-    * strict JSON adds ~770 bytes of quotes/colons/braces — over the
-    * tail window no matter the unit. Dropping the per-name quotes
-    * (names are [a-z0-9_]+, nothing to escape) buys ~350 bytes while
-    * the line stays one valid JSON object whose "q" field carries the
-    * packed map. Grammar (declared inline in "f" for the reader):
-    * `name:val` is a leaf, `name(children)` a group, `,` separates,
-    * flat names reconstruct by joining nested names with '_', and a
-    * bare `:val` names the group node itself. Full-precision flat maps
-    * ride bench_out.json + the committed BENCH_FULL.json. */
-  private[graft] def compactLine(results: Seq[(String, Double)], total: Double,
-                                 sfName: String): String = {
-    def build(unit: String, scale: Double, grammar: Boolean,
-              base36: Boolean = false): String = {
-      val entries = results.sortBy(_._1)
-        .map { case (k, v) =>
-          // -1 marks a FAILED query (both timed runs threw) — keep the
-          // sentinel visible in the compact line rather than rounding
-          // it up to a plausible-looking 0
-          (k.split('_').toList, if (v < 0) -1L else math.round(v * scale))
-        }
-      val enc: Long => String =
-        if (base36) v => java.lang.Long.toString(v, 36) else v => v.toString
-      // base36 tiers always self-describe (v36 in the hint): the value
-      // encoding must never depend on out-of-band knowledge
-      val f =
-        if (base36) """"f":"k:v(v base36),g(kids),join _","""
-        else if (grammar) """"f":"k:v,g(kids),join _","""
-        else ""
-      s"""{"u":"$unit",$f"q":"${emitTrie(entries, enc)}"}"""
-    }
-    // budget: the driver keeps the LAST 2000 stdout chars; with the sbt
-    // success epilogue suppressed (build.sbt showSuccess := false) the
-    // compact line + its newline is the tail's end, so ≤ 1995 keeps the
-    // whole line visible with margin. Fallback tiers ordered by
-    // PRECISION, not by format familiarity: decimal centiseconds (the
-    // r1-r9 format), then base-36 centiseconds (self-describing via
-    // the "v base36" hint, so safe for any consumer — and it keeps
-    // 10 ms resolution where a decimal-deciseconds tier would drop
-    // to 100 ms; the 168-key round 10 line outgrew decimal cs), then
-    // the gzip tier: the flat `name:cs` map deflated + base64 — the
-    // names compress ~2.5x, so it stays ~1.3k chars at ANY plausible
-    // key count while keeping full 10 ms resolution (at 168 keys even
-    // the base-36 deciseconds trie overflowed the window once fixture
-    // times ran a little hot — a size-bounded tier, not a tighter
-    // squeeze, is what actually closes that). The deciseconds tiers
-    // remain as paranoia; the full-precision flat map always rides
-    // BENCH_FULL.json.
-    Seq(build("cs", 100.0, grammar = true),
-        build("cs", 100.0, grammar = true, base36 = true),
-        buildGz(results),
-        // centiseconds through the DENSER wire encoding before giving
-        // up 10 ms resolution: raw deflate (no 18-byte gzip container)
-        // + Base85 (JSON-safe alphabet, 5 chars per 4 bytes vs
-        // base64's 4-per-3 — ~20% fewer payload chars); the 260-key
-        // round-14 fixture outgrew even the decisecond gzip tier, and
-        // this tier keeps centiseconds for it with ~300 chars of
-        // margin
-        buildB85(results),
-        build("ds", 10.0, grammar = true),
-        build("ds", 10.0, grammar = true, base36 = true),
-        buildGz(results, "ds", 10.0),
-        buildB85(results, "ds", 10.0),
-        // paranoia floor: WHOLE seconds through raw deflate + b85 —
-        // sub-second resolution is gone, but the line always fits
-        // (the 289-key round-15 fixture outgrew even decisecond b85
-        // by 8 chars; a line that clips in the driver's tail window
-        // loses EVERY query, so a coarse tier beats a truncated one.
-        // BENCH_FULL.json always rides full precision regardless)
-        buildB85(results, "s", 1.0))
-      .find(_.length <= 1995)
-      .getOrElse(buildB85(results, "s", 1.0))
-  }
-
-  /** The size-bounded compact tier: the PACKED-TRIE base-36
-    * centisecond payload (already the smallest plaintext form — shared
-    * name prefixes collapse into groups), gzipped and base64'd into
-    * one JSON object. Round 11's 190-key fixture outgrew the previous
-    * flat-map gzip tier (base64 undoes ~⅓ of the compression, and
-    * mostly-unique names compress poorly), so the compressor now gets
-    * the trie: ~2x smaller input, comfortably inside the window at any
-    * plausible key count. The "f" hint names the exact decode
-    * pipeline, so the consumer needs no out-of-band knowledge:
-    * base64 → gunzip → the packed grammar with base-36 values (failed
-    * queries keep the -1 sentinel). */
-  private def buildGz(results: Seq[(String, Double)], unit: String = "cs",
-                      scale: Double = 100.0): String = {
-    val entries = results.sortBy(_._1)
-      .map { case (k, v) =>
-        (k.split('_').toList, if (v < 0) -1L else math.round(v * scale)) }
-    val packed = emitTrie(entries, v => java.lang.Long.toString(v, 36))
-    val bos = new java.io.ByteArrayOutputStream()
-    val gz = new java.util.zip.GZIPOutputStream(bos) {
-      `def`.setLevel(java.util.zip.Deflater.BEST_COMPRESSION)
-    }
-    gz.write(packed.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    gz.close()
-    val b64 = java.util.Base64.getEncoder.encodeToString(bos.toByteArray)
-    s"""{"u":"$unit","f":"b64 -> gunzip -> k:v(v base36),g(kids),join _","q":"$b64"}"""
-  }
-
-  /** Python-stdlib-compatible Base85 (the `base64.b85encode` RFC-1924
-    * alphabet): 4 bytes → 5 chars big-endian, partial final group of
-    * n bytes → n+1 chars. Every alphabet char is JSON-string-safe (no
-    * quote, no backslash, no control chars), so the payload embeds
-    * unescaped. */
-  private val B85Alphabet = "0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZ" +
-    "abcdefghijklmnopqrstuvwxyz!#$%&()*+-;<=>?@^_`{|}~"
-
-  private[graft] def b85(bytes: Array[Byte]): String = {
-    val sb = new StringBuilder((bytes.length / 4 + 1) * 5)
-    var i = 0
-    while (i < bytes.length) {
-      val n = math.min(4, bytes.length - i)
-      var acc = 0L
-      var j = 0
-      while (j < 4) {
-        acc = (acc << 8) | (if (j < n) bytes(i + j) & 0xffL else 0L)
-        j += 1
-      }
-      val chars = new Array[Char](5)
-      var k = 4
-      while (k >= 0) { chars(k) = B85Alphabet((acc % 85).toInt); acc /= 85; k -= 1 }
-      sb.appendAll(chars, 0, n + 1)
-      i += 4
-    }
-    sb.toString
-  }
-
-  /** The densest compact tier: the packed-trie base-36 payload through
-    * RAW deflate (no gzip container — 18 fewer bytes) and Base85 (5
-    * chars per 4 bytes vs base64's 4-per-3). The "f" hint names the
-    * exact decode pipeline — in Python that is
-    * `zlib.decompress(base64.b85decode(q), -15)` — so the consumer
-    * needs no out-of-band knowledge. */
-  private def buildB85(results: Seq[(String, Double)], unit: String = "cs",
-                       scale: Double = 100.0): String = {
-    val entries = results.sortBy(_._1)
-      .map { case (k, v) =>
-        (k.split('_').toList, if (v < 0) -1L else math.round(v * scale)) }
-    val packed = emitTrie(entries, v => java.lang.Long.toString(v, 36))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val d = new java.util.zip.Deflater(
-      java.util.zip.Deflater.BEST_COMPRESSION, true)
-    d.setInput(packed)
-    d.finish()
-    val bos = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](4096)
-    while (!d.finished()) bos.write(buf, 0, d.deflate(buf))
-    d.end()
-    s"""{"u":"$unit","f":"b85 -> raw deflate -> k:v(v base36),g(kids),join _","q":"${b85(bos.toByteArray)}"}"""
-  }
-
-  /** Emit items (token-path, value) in the packed grammar, collapsing
-    * single-child chains back into '_'-joined names. */
-  private def emitTrie(items: Seq[(List[String], Long)],
-                       enc: Long => String = _.toString): String = {
-    val (leaves, rest) = items.partition(_._1.isEmpty)
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    leaves.foreach { case (_, v) => parts += ":" + enc(v) }
-    rest.groupBy(_._1.head).toSeq.sortBy(_._1).foreach { case (tok, g) =>
-      var path = List(tok)
-      var sub: Seq[(List[String], Long)] = g.map { case (t, v) => (t.tail, v) }
-      var collapsing = true
-      while (collapsing) {
-        val heads = sub.collect { case (h :: _, _) => h }.distinct
-        if (sub.forall(_._1.nonEmpty) && heads.size == 1) {
-          path = path :+ heads.head
-          sub = sub.map { case (t, v) => (t.tail, v) }
-        } else collapsing = false
-      }
-      val name = path.mkString("_")
-      sub match {
-        case Seq((Nil, v)) => parts += name + ":" + enc(v)
-        case _             => parts += name + "(" + emitTrie(sub, enc) + ")"
-      }
-    }
-    parts.mkString(",")
   }
 }

@@ -1,7 +1,7 @@
 package graft.tsdb
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /**
@@ -707,12 +707,17 @@ object Promql {
    * needs at 100 TB.
    *
    * Requires `startTs % stepSec == 0` and, per range selector,
-   * `d % stepSec == 0` (the bucket-alignment contract). Supported in
-   * stepped mode: the `_over_time` family, aggregations (by/without —
-   * the step is implicitly part of every grouping), binary ops
-   * (matched per step), scalar arithmetic, topk/bottomk (per step).
-   * Sample-hungry functions (rate/increase/…) and bare instant
-   * selectors need per-step sample windows and are rejected here.
+   * `d % stepSec == 0` (the bucket-alignment contract). Every range
+   * function lowers in stepped mode — the `_over_time` family from
+   * bucket partials, rate/increase/changes/resets from pair partials,
+   * delta/irate/deriv/`ts_of_*`/… from per-bucket partials of one
+   * decode, quantile/mad/holt_winters from decoded points exploded
+   * onto their covering windows — as do aggregations
+   * (by/without — the step is implicitly part of every grouping),
+   * binary ops (matched per step), scalar arithmetic, `@`-pinned
+   * selectors (evaluated once) and subqueries. A bare instant selector
+   * has no window to fold and is rejected: wrap it in an `_over_time`
+   * function.
    */
   def evalRange(chunks: DataFrame, labelCols: Seq[String], query: String,
                 startTs: Long, endTs: Long, stepSec: Long,
@@ -1636,52 +1641,28 @@ object Promql {
     * broadcast-shaped at any point volume; stepped mode rides the
     * same decode-and-explode as every non-composable window fn. */
   private def madOverTime(arg: Expr, ctx: Ctx): Vec = {
-    val sel = arg match {
-      case s: VectorSel => s
-      case _ => throw new IllegalArgumentException(
-        "mad_over_time expects a range selector argument")
-    }
+    val sel = rangeSel("mad_over_time", arg)
     val L = ctx.labelCols
-    if (ctx.grid.isDefined) {
-      atPinned(sel, ctx)(c => madOverTime(arg, c)) match {
-        case Some(v) => return v
-        case None => ()
+    atPinned(sel, ctx)(madOverTime(arg, _)).getOrElse {
+      if (ctx.grid.isDefined) {
+        val g = windowGrid("mad_over_time", sel, ctx)
+        Vec(g.stamp(mad(g.perWindow(sel, ctx), L :+ "__i", identity), L), L :+ "ts", Dbl)
+      } else {
+        val (from, to) = window(sel, ctx)
+        Vec(mad(decoded(sel, from, to, ctx), L, broadcast(_)), L, Dbl)
       }
-      val (start0, step) = ctx.grid.get
-      val d = sel.range.getOrElse(
-        throw new IllegalArgumentException("mad_over_time needs sel[duration]"))
-      require(d % step == 0 && d >= step,
-        s"window ${d}s must be a positive multiple of the ${step}s step grid")
-      val start = start0 - sel.offset
-      require(start % step == 0, "offset must preserve step alignment")
-      val end = ctx.evalTs - sel.offset
-      val k = d / step
-      val nSteps = (end - start) / step + 1
-      val tLast = start + (nSteps - 1) * step
-      val j0 = start / step
-      val keyed = decoded(sel, start - d, tLast - 1, ctx)
-        .withColumn("__j", expr(s"(ts div ${step}L) - ${j0}L"))
-        .withColumn("__i", explode(sequence(
-          greatest(col("__j") + lit(1L), lit(0L)),
-          least(col("__j") + lit(k), lit(nSteps - 1)))))
-      val gk = L.map(col) :+ col("__i")
-      val med = keyed.groupBy(gk: _*)
-        .agg(expr("percentile(cents, 0.5)").as("__med"))
-      val perStep = keyed.join(med, L :+ "__i")
-        .groupBy(gk: _*)
-        .agg((expr("percentile(abs(cents - __med), 0.5)") / lit(100.0)).as("value"))
-        .withColumn("ts", lit(start0) + col("__i") * lit(step))
-        .select((L :+ "ts" :+ "value").map(col): _*)
-      return Vec(perStep, L :+ "ts", Dbl)
     }
-    val (from, to) = window(sel, ctx)
-    val pts = decoded(sel, from, to, ctx)
-    val med = pts.groupBy(L.map(col): _*)
+  }
+
+  /** median(|x − median(x)|) of the samples per `keys`; `hint` places
+    * the per-key median frame on the join's build side. */
+  private def mad(pts: DataFrame, keys: Seq[String],
+                  hint: DataFrame => DataFrame): DataFrame = {
+    val med = pts.groupBy(keys.map(col): _*)
       .agg(expr("percentile(cents, 0.5)").as("__med"))
-    val df = pts.join(broadcast(med), L)
-      .groupBy(L.map(col): _*)
+    pts.join(hint(med), keys)
+      .groupBy(keys.map(col): _*)
       .agg((expr("percentile(abs(cents - __med), 0.5)") / lit(100.0)).as("value"))
-    Vec(df, L, Dbl)
   }
 
   /** `info(v, {sel})` — Prometheus 3.x experimental, the general form
@@ -1761,48 +1742,36 @@ object Promql {
     * the steps it is visible at (pure integer index arithmetic — no
     * per-step query, no range join), the distinct visible steps
     * broadcast, and the grid anti-joins them. */
-  private def steppedAbsent(sel: VectorSel, ctx: Ctx): Vec = {
-    atPinned(sel, ctx)(c => absentVec(sel, c)) match {
-      case Some(v) => return v
-      case None => ()
+  private def steppedAbsent(sel: VectorSel, ctx: Ctx): Vec =
+    atPinned(sel, ctx)(absentVec(sel, _)).getOrElse {
+      val g = stepGrid(ctx, sel.offset)
+      val spark = ctx.chunks.sparkSession
+      val eqs = sel.matchers.collect { case Labels.Eq(l, v) => (l, v) }
+      val labels = ctx.labelCols.filter(l => eqs.exists(_._1 == l))
+      // sample at ts is visible at step t iff aOff <= t - ts <= bOff
+      val (aOff, bOff) = sel.range match {
+        case Some(d) => (1L, d) // window [t−d, t−1]
+        case None => (0L, ctx.lookbackSec - 1) // lookback (t−L, t]
+      }
+      val pts = Labels.selectRangeTs(ctx.chunks, ctx.labelCols,
+        matcherString(sel.matchers), g.start - bOff, g.tLast - aOff)
+      val stepD = g.step.toDouble
+      val present = pts
+        .withColumn("__lo", greatest(ceilIdx(col("ts"), aOff, g.start, stepD), lit(0L)))
+        .withColumn("__hi", least(floorIdx(col("ts"), bOff, g.start, stepD),
+          lit(g.nSteps - 1)))
+        .filter(col("__lo") <= col("__hi"))
+        .select(explode(sequence(col("__lo"), col("__hi"))).as("__i"))
+        .distinct()
+      var grid = spark.range(g.nSteps).select(col("id").as("__i"))
+      eqs.filter(e => labels.contains(e._1))
+        .foreach { case (l, v) => grid = grid.withColumn(l, lit(v)) }
+      val df = grid.join(broadcast(present), Seq("__i"), "left_anti")
+        .withColumn("ts", g.stepTs)
+        .withColumn("value", lit(1L))
+        .select((labels :+ "ts" :+ "value").map(col): _*)
+      Vec(df, labels :+ "ts", Count)
     }
-    val (start0, step) = ctx.grid.get
-    val spark = ctx.chunks.sparkSession
-    val eqs = sel.matchers.collect { case Labels.Eq(l, v) => (l, v) }
-    val labels = ctx.labelCols.filter(l => eqs.exists(_._1 == l))
-    val start = start0 - sel.offset
-    require(start % step == 0, "offset must preserve step alignment")
-    val end = ctx.evalTs - sel.offset
-    val nSteps = (end - start) / step + 1
-    // sample at ts is visible at step t iff aOff <= t - ts <= bOff
-    val (aOff, bOff) = sel.range match {
-      case Some(d) => (1L, d) // window [t−d, t−1]
-      case None => (0L, ctx.lookbackSec - 1) // lookback (t−L, t]
-    }
-    val probeFrom = start - bOff
-    val probeTo = start + (nSteps - 1) * step - aOff
-    val pts = Labels.selectRangeTs(ctx.chunks, ctx.labelCols,
-      matcherString(sel.matchers), probeFrom, probeTo)
-    val stepD = step.toDouble
-    val present = pts
-      .withColumn("__lo", greatest(
-        ceil((col("ts") + lit(aOff) - lit(start)) / lit(stepD)).cast("long"),
-        lit(0L)))
-      .withColumn("__hi", least(
-        floor((col("ts") + lit(bOff) - lit(start)) / lit(stepD)).cast("long"),
-        lit(nSteps - 1)))
-      .filter(col("__lo") <= col("__hi"))
-      .select(explode(sequence(col("__lo"), col("__hi"))).as("__i"))
-      .distinct()
-    var grid = spark.range(nSteps).select(col("id").as("__i"))
-    eqs.filter(e => labels.contains(e._1))
-      .foreach { case (l, v) => grid = grid.withColumn(l, lit(v)) }
-    val df = grid.join(broadcast(present), Seq("__i"), "left_anti")
-      .withColumn("ts", lit(start0) + col("__i") * lit(step))
-      .withColumn("value", lit(1L))
-      .select((labels :+ "ts" :+ "value").map(col): _*)
-    Vec(df, labels :+ "ts", Count)
-  }
 
   /** PromQL sort()/sort_desc(): order an instant vector by value
     * (label tiebreak for determinism). Ordering is a presentation
@@ -1826,40 +1795,34 @@ object Promql {
     // step's lookback — each sample explodes onto the steps it is
     // visible at (integer index arithmetic, same as stepped absent),
     // one max per (series, step)
-    if (ctx.grid.isDefined) {
-      atPinned(sel, ctx)(c => timestampVec(arg, c)) match {
-        case Some(v) => return v
-        case None => ()
+    atPinned(sel, ctx)(timestampVec(arg, _)).getOrElse {
+      if (ctx.grid.isDefined) {
+        val g = stepGrid(ctx, sel.offset)
+        val lb = ctx.lookbackSec
+        val pts = Labels.selectRangeTs(ctx.chunks, L, matcherString(sel.matchers),
+          g.start - lb + 1, g.tLast)
+        val stepD = g.step.toDouble
+        // the lower bound stays inline: ceilIdx's `ts + 0` would be a
+        // different plan expression
+        val perStep = pts
+          .withColumn("__lo", greatest(
+            ceil((col("ts") - lit(g.start)) / lit(stepD)).cast("long"), lit(0L)))
+          .withColumn("__hi", least(floorIdx(col("ts"), lb - 1, g.start, stepD),
+            lit(g.nSteps - 1)))
+          .filter(col("__lo") <= col("__hi"))
+          .withColumn("__i", explode(sequence(col("__lo"), col("__hi"))))
+          .groupBy(L.map(col) :+ col("__i"): _*)
+          .agg(max(col("ts")).as("value"))
+        Vec(g.stamp(perStep, L), L :+ "ts", Count)
+      } else {
+        val to = sel.at.getOrElse(ctx.evalTs) - sel.offset
+        val from = to - ctx.lookbackSec + 1
+        val df = Labels.selectRangeTs(ctx.chunks, L, matcherString(sel.matchers), from, to)
+          .groupBy(L.map(col): _*)
+          .agg(max(col("ts")).as("value"))
+        Vec(df, L, Count)
       }
-      val (start0, step) = ctx.grid.get
-      val start = start0 - sel.offset
-      require(start % step == 0, "offset must preserve step alignment")
-      val end = ctx.evalTs - sel.offset
-      val nSteps = (end - start) / step + 1
-      val lb = ctx.lookbackSec
-      val pts = Labels.selectRangeTs(ctx.chunks, L, matcherString(sel.matchers),
-        start - lb + 1, start + (nSteps - 1) * step)
-      val stepD = step.toDouble
-      val perStep = pts
-        .withColumn("__lo", greatest(
-          ceil((col("ts") - lit(start)) / lit(stepD)).cast("long"), lit(0L)))
-        .withColumn("__hi", least(
-          floor((col("ts") + lit(lb - 1) - lit(start)) / lit(stepD)).cast("long"),
-          lit(nSteps - 1)))
-        .filter(col("__lo") <= col("__hi"))
-        .withColumn("__i", explode(sequence(col("__lo"), col("__hi"))))
-        .groupBy(L.map(col) :+ col("__i"): _*)
-        .agg(max(col("ts")).as("value"))
-        .withColumn("ts", lit(start0) + col("__i") * lit(step))
-        .select((L :+ "ts" :+ "value").map(col): _*)
-      return Vec(perStep, L :+ "ts", Count)
     }
-    val to = sel.at.getOrElse(ctx.evalTs) - sel.offset
-    val from = to - ctx.lookbackSec + 1
-    val df = Labels.selectRangeTs(ctx.chunks, L, matcherString(sel.matchers), from, to)
-      .groupBy(L.map(col): _*)
-      .agg(max(col("ts")).as("value"))
-    Vec(df, L, Count)
   }
 
   /** `quantile_over_time(φ, sel[d])`: the φ-quantile of a series'
@@ -1867,50 +1830,24 @@ object Promql {
     * grid (Spark's exact `percentile`, DuckDB's `quantile_cont`: the
     * same (1−f)·a + f·b rule), one division by 100 at output. */
   private def quantileOverTime(phi: Double, arg: Expr, ctx: Ctx): Vec = {
-    val sel = arg match {
-      case s: VectorSel => s
-      case _ => throw new IllegalArgumentException(
-        "quantile_over_time expects a range selector argument")
-    }
+    val sel = rangeSel("quantile_over_time", arg)
     val L = ctx.labelCols
+    val q = (expr(s"percentile(cents, $phi)") / lit(100.0)).as("value")
     // stepped mode — the p95 panel: quantiles don't compose from
     // partials, so each decoded point explodes onto the ≤ k windows
     // containing its bucket (windows are unions of whole step
     // buckets) and ONE exact percentile runs per (series, step) —
     // still a single decode of the selector's survivors
-    if (ctx.grid.isDefined) {
-      atPinned(sel, ctx)(c => quantileOverTime(phi, arg, c)) match {
-        case Some(v) => return v
-        case None => ()
+    atPinned(sel, ctx)(quantileOverTime(phi, arg, _)).getOrElse {
+      if (ctx.grid.isDefined) {
+        val g = windowGrid("quantile_over_time", sel, ctx)
+        Vec(g.stamp(g.perWindow(sel, ctx).groupBy(L.map(col) :+ col("__i"): _*).agg(q), L),
+          L :+ "ts", Dbl)
+      } else {
+        val (from, to) = window(sel, ctx)
+        Vec(decoded(sel, from, to, ctx).groupBy(L.map(col): _*).agg(q), L, Dbl)
       }
-      val (start0, step) = ctx.grid.get
-      val d = sel.range.getOrElse(
-        throw new IllegalArgumentException("quantile_over_time needs sel[duration]"))
-      require(d % step == 0 && d >= step,
-        s"window ${d}s must be a positive multiple of the ${step}s step grid")
-      val start = start0 - sel.offset
-      require(start % step == 0, "offset must preserve step alignment")
-      val end = ctx.evalTs - sel.offset
-      val k = d / step
-      val nSteps = (end - start) / step + 1
-      val tLast = start + (nSteps - 1) * step
-      val j0 = start / step
-      val perStep = decoded(sel, start - d, tLast - 1, ctx)
-        .withColumn("__j", expr(s"(ts div ${step}L) - ${j0}L"))
-        .withColumn("__i", explode(sequence(
-          greatest(col("__j") + lit(1L), lit(0L)),
-          least(col("__j") + lit(k), lit(nSteps - 1)))))
-        .groupBy(L.map(col) :+ col("__i"): _*)
-        .agg((expr(s"percentile(cents, $phi)") / lit(100.0)).as("value"))
-        .withColumn("ts", lit(start0) + col("__i") * lit(step))
-        .select((L :+ "ts" :+ "value").map(col): _*)
-      return Vec(perStep, L :+ "ts", Dbl)
     }
-    val (from, to) = window(sel, ctx)
-    val df = decoded(sel, from, to, ctx)
-      .groupBy(L.map(col): _*)
-      .agg((expr(s"percentile(cents, $phi)") / lit(100.0)).as("value"))
-    Vec(df, L, Dbl)
   }
 
   /** `holt_winters(sel[d], sf, tf)` (Prometheus 3.x:
@@ -1923,56 +1860,31 @@ object Promql {
   private def holtWintersVec(arg: Expr, sf: Double, tf: Double, ctx: Ctx): Vec = {
     require(sf > 0 && sf < 1 && tf > 0 && tf < 1,
       "holt_winters smoothing factors must be in (0, 1)")
-    val sel = arg match {
-      case s: VectorSel => s
-      case _ => throw new IllegalArgumentException(
-        "holt_winters expects a range selector argument")
-    }
+    val sel = rangeSel("holt_winters", arg)
     val L = ctx.labelCols
-    // stepped mode — the smoothing panel: the fold is order-dependent
-    // so it can't compose from partials; each decoded point explodes
-    // onto its covering windows and the kernel folds once per
-    // (series, step). One decode of the selector's survivors.
-    if (ctx.grid.isDefined) {
-      atPinned(sel, ctx)(c => holtWintersVec(arg, sf, tf, c)) match {
-        case Some(v) => return v
-        case None => ()
-      }
-      val (start0, step) = ctx.grid.get
-      val d = sel.range.getOrElse(
-        throw new IllegalArgumentException("holt_winters needs sel[duration]"))
-      require(d % step == 0 && d >= step,
-        s"window ${d}s must be a positive multiple of the ${step}s step grid")
-      val start = start0 - sel.offset
-      require(start % step == 0, "offset must preserve step alignment")
-      val end = ctx.evalTs - sel.offset
-      val k = d / step
-      val nSteps = (end - start) / step + 1
-      val tLast = start + (nSteps - 1) * step
-      val j0 = start / step
-      val perStep = decoded(sel, start - d, tLast - 1, ctx)
-        .withColumn("__j", expr(s"(ts div ${step}L) - ${j0}L"))
-        .withColumn("__i", explode(sequence(
-          greatest(col("__j") + lit(1L), lit(0L)),
-          least(col("__j") + lit(k), lit(nSteps - 1)))))
-        .groupBy(L.map(col) :+ col("__i"): _*)
-        .agg(count(lit(1)).as("__n"),
-          collect_list(struct(col("ts"), col("cents"))).as("__arr"))
-        .filter(col("__n") >= 2)
-        .withColumn("__hw", graft.functions.hw_fold(col("__arr"), sf, tf))
-        .withColumn("ts", lit(start0) + col("__i") * lit(step))
-        .select(L.map(col) :+ col("ts") :+ col("__hw.level").as("value"): _*)
-      return Vec(perStep, L :+ "ts", Dbl)
-    }
-    val (from, to) = window(sel, ctx)
-    val df = decoded(sel, from, to, ctx)
-      .groupBy(L.map(col): _*)
+    def smoothed(g: RelationalGroupedDataset): DataFrame = g
       .agg(count(lit(1)).as("__n"),
         collect_list(struct(col("ts"), col("cents"))).as("__arr"))
       .filter(col("__n") >= 2)
       .withColumn("__hw", graft.functions.hw_fold(col("__arr"), sf, tf))
-      .select(L.map(col) :+ col("__hw.level").as("value"): _*)
-    Vec(df, L, Dbl)
+    // stepped mode — the smoothing panel: the fold is order-dependent
+    // so it can't compose from partials; each decoded point explodes
+    // onto its covering windows and the kernel folds once per
+    // (series, step). One decode of the selector's survivors.
+    atPinned(sel, ctx)(holtWintersVec(arg, sf, tf, _)).getOrElse {
+      if (ctx.grid.isDefined) {
+        val g = windowGrid("holt_winters", sel, ctx)
+        val perStep = smoothed(g.perWindow(sel, ctx).groupBy(L.map(col) :+ col("__i"): _*))
+          .withColumn("ts", g.stepTs)
+          .select(L.map(col) :+ col("ts") :+ col("__hw.level").as("value"): _*)
+        Vec(perStep, L :+ "ts", Dbl)
+      } else {
+        val (from, to) = window(sel, ctx)
+        val df = smoothed(decoded(sel, from, to, ctx).groupBy(L.map(col): _*))
+          .select(L.map(col) :+ col("__hw.level").as("value"): _*)
+        Vec(df, L, Dbl)
+      }
+    }
   }
 
   /** Pointwise math. Exact kinds stay exact where the operation lands
@@ -2146,9 +2058,223 @@ object Promql {
     val df = pts
       .withColumn("cents", round(col("v") * 100).cast("long"))
       .groupBy(ctx.labelCols.map(col): _*)
-      .agg(max(struct(col("ts"), col("cents"))).as("last"))
+      .agg(lastSample.as("last"))
       .select(ctx.labelCols.map(col) :+ col("last.cents").as("value"): _*)
     Vec(df, ctx.labelCols, Cents)
+  }
+
+  // ============ range functions: what both lowerings share ============
+  //
+  // A range function lowers twice: instant arms read the window
+  // [T−d+1, T] and get header-stat partials; stepped arms read
+  // [t−d, t−1] as k = d/step whole buckets of one grid. An instant
+  // query lowered as a one-step grid (Prometheus's engine shape) is
+  // correct, but each instant plan then gains the stepped form's second
+  // aggregation and explode: `promql_ts_of_last` went from 4 to 6
+  // exchanges and 4 to 8 aggregates, and 14 instant oracle keys ran
+  // 1.6–2.5× slower at sf0.01. So both lowerings stay, and what they
+  // share lives once, below: the step grid, the counter deltas and
+  // fold, the regression partials, the irate/idelta finish, the
+  // `ts_of_*` extreme and the point-fold aggregates.
+
+  /** The step grid of one stepped lowering. `start`/`end` are the
+    * data-side grid (the selector's offset applied); output `ts` stays
+    * on the un-offset grid from `start0`. A window of `d` seconds is
+    * k = d/step whole buckets, and bucket j (relative to `start`) lies
+    * inside windows i ∈ [j+1, j+k]. The lookback lowerings (absent,
+    * timestamp) have no window: d = 0 and they use only the grid. */
+  private final case class StepGrid(start0: Long, step: Long, start: Long, end: Long,
+                                    d: Long) {
+    val k: Long = d / step
+    val nSteps: Long = (end - start) / step + 1
+    val tLast: Long = start + (nSteps - 1) * step
+    val j0: Long = start / step // bucket index origin (start is step-aligned)
+    /** The bucket index of the seconds column `ts`: (ts div step) − j0. */
+    def bucket(ts: String): Column = expr(s"($ts div ${step}L) - ${j0}L")
+    /** Bucket `j` onto its windows [j+1, j+k] ∩ [0, nSteps−1]. */
+    def windows(j: Column): Column = explode(sequence(
+      greatest(j + lit(1L), lit(0L)),
+      least(j + lit(k), lit(nSteps - 1))))
+    /** The output instant of window `__i`. */
+    def stepTs: Column = lit(start0) + col("__i") * lit(step)
+    /** Stamp each window's instant; keep `labels, ts, value`. */
+    def stamp(df: DataFrame, labels: Seq[String]): DataFrame =
+      df.withColumn("ts", stepTs).select((labels :+ "ts" :+ "value").map(col): _*)
+    /** The selector's decoded samples over every window of the grid. */
+    def samples(sel: VectorSel, ctx: Ctx): DataFrame =
+      decoded(sel, start - d, tLast - 1, ctx)
+    /** Each decoded sample exploded onto its ≤ k covering windows
+      * (`__i`): the form of a fold that does not compose from bucket
+      * partials. */
+    def perWindow(sel: VectorSel, ctx: Ctx): DataFrame = samples(sel, ctx)
+      .withColumn("__j", bucket("ts"))
+      .withColumn("__i", windows(col("__j")))
+  }
+
+  /** The range query's grid for a selector with `offset`. */
+  private def stepGrid(ctx: Ctx, offset: Long, d: Long = 0L): StepGrid = {
+    val (start0, step) = ctx.grid.get
+    val start = start0 - offset
+    require(start % step == 0, "offset must preserve step alignment")
+    StepGrid(start0, step, start, ctx.evalTs - offset, d)
+  }
+
+  /** [[stepGrid]] for a range selector, whose window must be whole
+    * step buckets (the bucket-alignment contract). */
+  private def windowGrid(fn: String, sel: VectorSel, ctx: Ctx): StepGrid = {
+    val step = ctx.grid.get._2
+    val d = sel.range.getOrElse(
+      throw new IllegalArgumentException(s"$fn needs sel[duration]"))
+    require(d % step == 0 && d >= step,
+      s"window ${d}s must be a positive multiple of the ${step}s step grid")
+    stepGrid(ctx, sel.offset, d)
+  }
+
+  private def rangeSel(fn: String, arg: Expr): VectorSel = arg match {
+    case s: VectorSel => s
+    case _ => throw new IllegalArgumentException(s"$fn expects a range selector argument")
+  }
+
+  /** A window's first / last sample: (ts, cents) struct order is time
+    * order, ties on ts resolving by value. */
+  private def firstSample: Column = min(struct(col("ts"), col("cents")))
+  private def lastSample: Column = max(struct(col("ts"), col("cents")))
+
+  /** Consecutive-sample deltas per series: each decoded sample gains
+    * its predecessor's cents as `prev` (and its timestamp as `prevTs`
+    * when given) in (ts, cents) order, a series' first sample drops,
+    * and `d` = cents − prev.
+    *
+    * NATIVE-HISTOGRAM (nb) vectors: Prometheus detects counter resets
+    * at the HISTOGRAM grain — a drop in ANY arm (count or a bucket)
+    * means the whole sample re-based, so EVERY arm's delta at that
+    * instant is a post-restart re-base, not an increase. graft
+    * decomposes an nb store into per-arm counter series; per-arm
+    * positive-delta is identical when all arms drop together (the real
+    * restart) but diverges when one arm moves against the others (e.g.
+    * a bucket that already out-grew its pre-reset value across the
+    * restart gap) — so rate/increase over an nb vector zero the WHOLE
+    * histogram's deltas at any instant where any STRUCTURAL arm drops.
+    * The sum arm is excluded from the DETECTION (Prometheus reads
+    * count/bucket structure, never the sum, which legitimately falls
+    * when negative observations ride a gauge histogram — the signed
+    * mirrored-span store) but re-bases WITH the sample when a true
+    * reset fires. Both windows share one partitioning (the histogram
+    * identity), so the grain change costs a sort, never a second
+    * exchange. Arms share the scrape grid (native scrapes carry the
+    * full layout), which is what makes the same-instant frame the
+    * histogram sample. changes()/resets() stay PER-ARM by definition
+    * here: each arm is its own counter series in this data model
+    * (documented; Prometheus-side native resets() is the count-arm's
+    * resets, which this model expresses as resets(...{nb="count"})).
+    * Subquery-composed rate keeps per-arm semantics too — Prometheus
+    * never routes native histograms through subqueries (float-sample
+    * surface). */
+  private def counterDeltas(pts: DataFrame, L: Seq[String], fn: String,
+                            prev: String, d: String,
+                            prevTs: Option[String] = None): DataFrame = {
+    def lagged(w: WindowSpec): DataFrame =
+      prevTs.foldLeft(pts)((df, c) => df.withColumn(c, lag("ts", 1).over(w)))
+        .withColumn(prev, lag("cents", 1).over(w))
+    val hasPrev = col(prevTs.getOrElse(prev)).isNotNull
+    if (Set("rate", "increase")(fn) && L.contains("nb")) {
+      val hg = L.filterNot(_ == "nb")
+      def hgW = if (hg.isEmpty) Window.partitionBy()
+        else Window.partitionBy(hg.map(col): _*)
+      val w = hgW.orderBy("nb", "ts", "cents")
+      val rstW = hgW.orderBy("ts").rangeBetween(0, 0)
+      lagged(w).withColumn("__pnb", lag("nb", 1).over(w))
+        .filter(hasPrev && col("__pnb") === col("nb"))
+        .withColumn(d, col("cents") - col(prev))
+        .withColumn(d,
+          when(max(when(col(d) < 0 && col("nb") =!= "sum", 1)
+              .otherwise(0)).over(rstW) === 1,
+            lit(0L)).otherwise(greatest(col(d), lit(0L))))
+    } else {
+      lagged(Window.partitionBy(L.map(col): _*).orderBy("ts", "cents"))
+        .filter(hasPrev)
+        .withColumn(d, col("cents") - col(prev))
+    }
+  }
+
+  /** rate/increase sum the positive deltas (reset-aware), changes
+    * counts the nonzero ones, resets the negative ones. */
+  private def counterFold(fn: String, d: Column): Column = fn match {
+    case "increase" | "rate" => sum(when(d > 0, d).otherwise(0L))
+    case "changes" => sum(when(d =!= 0, 1L).otherwise(0L))
+    case "resets" => sum(when(d < 0, 1L).otherwise(0L))
+  }
+
+  /** The fold's representation: rate keeps the increase exact with
+    * denom `rateDenom` (range·unit), so the per-second division happens
+    * ONCE at output and `sum(rate(..))` stays exact; increase keeps the
+    * samples' kind; changes/resets are counts. */
+  private def counterKind(fn: String, rateDenom: Double, increase: ValKind): ValKind =
+    fn match {
+      case "rate" => Exact(rateDenom)
+      case "increase" => increase
+      case _ => Count
+    }
+
+  /** Exact regression partials n, Σt, Σv, Σtv, Σt² per group on the
+    * integer (relative-second `__t`, cent) grid. */
+  private def regressionPartials(g: RelationalGroupedDataset): DataFrame =
+    g.agg(count(lit(1)).as("__n"), sum("__t").as("__st"), sum("cents").as("__sv"),
+      sum(col("__t") * col("cents")).as("__stv"), sum(col("__t") * col("__t")).as("__stt"))
+
+  /** BIGINT slope numerator/denominator from the partials; groups with
+    * < 2 samples or a degenerate denominator drop (PromQL emits nothing
+    * for them). */
+  private def regressionLine(g: DataFrame): DataFrame = g
+    .filter(col("__n") >= 2)
+    .withColumn("__num", col("__n") * col("__stv") - col("__st") * col("__sv"))
+    .withColumn("__den", col("__n") * col("__stt") - col("__st") * col("__st"))
+    .filter(col("__den") =!= 0)
+
+  /** deriv: the least-squares slope, one division, per second. */
+  private def derivSlope: Column = col("__num").cast("double") / (lit(100.0) * col("__den"))
+
+  /** predict_linear: ŷ = v̄ + slope·(x − t̄) at `x` (seconds on the
+    * partials' own origin); three fixed divisions, mirrored op-for-op
+    * in the SQL oracle. */
+  private def predicted(x: Column): Column = {
+    val meanT = col("__st").cast("double") / col("__n")
+    val meanV = col("__sv").cast("double") / col("__n")
+    val slope = col("__num").cast("double") / col("__den")
+    (meanV + slope * (x - meanT)) / lit(100.0)
+  }
+
+  /** irate/idelta from a window's last two samples `__l`, `__p`:
+    * idelta is their cent difference; irate counts a counter reset
+    * (last < prev) as increase = last, per second. */
+  private def lastTwo(fn: String): (Column, ValKind) = fn match {
+    case "idelta" => (col("__l.cents") - col("__p.cents"), Cents)
+    case _ =>
+      val incr = when(col("__l.cents") >= col("__p.cents"),
+        col("__l.cents") - col("__p.cents")).otherwise(col("__l.cents"))
+      (incr.cast("double") /
+        ((col("__l.ts") - col("__p.ts")) * lit(100.0)).cast("double"), Dbl)
+  }
+
+  /** Prometheus 3.1 experimental `ts_of_*`: the TIMESTAMP of the
+    * window's last / maximum / minimum sample, as one extreme over
+    * (value, ts) structs. Value ties resolve to the LATEST sample (max
+    * struct on (cents, ts); the min arm negates ts inside the struct so
+    * ties still answer with the latest), integer seconds end-to-end.
+    * The extremes compose: a window's extreme is the extreme of its
+    * buckets' extremes. */
+  private val TsOfFns = Set("ts_of_last_over_time", "ts_of_max_over_time",
+    "ts_of_min_over_time")
+  private def tsOfExtreme(fn: String): Column = fn match {
+    case "ts_of_last_over_time" => max(col("ts"))
+    case "ts_of_max_over_time" => max(struct(col("cents"), col("ts")))
+    case _ => min(struct(col("cents"), (-col("ts")).as("nts")))
+  }
+  /** The timestamp held by the extreme column `x`. */
+  private def tsOfValue(fn: String, x: String): Column = fn match {
+    case "ts_of_last_over_time" => col(x)
+    case "ts_of_max_over_time" => col(s"$x.ts")
+    case _ => -col(s"$x.nts")
   }
 
   /** Range-vector functions. The `_over_time` family answers from
@@ -2161,42 +2287,23 @@ object Promql {
     "present_over_time")
 
   private def rangeFn(fn: String, arg: Expr, ctx: Ctx): Vec = {
-    val sel = arg match {
-      case s: VectorSel => s
-      case _ => throw new IllegalArgumentException(s"$fn expects a range selector argument")
-    }
-    if (ctx.grid.isDefined) {
-      if (sel.at.isDefined) {
-        // `fn(sel[d] @ T)` in a range query: the pinned window is the
-        // SAME at every step (Grafana's "compare vs fixed instant"
-        // panel) — evaluate ONCE in instant mode and replicate the
-        // per-series constant across the grid via a broadcast of the
-        // (≤ steps)-row grid, never a per-step re-evaluation
-        val inst = rangeFn(fn, arg, ctx.copy(grid = None))
-        val grid = timeVec(ctx).df.select("ts")
-        return Vec(inst.df.crossJoin(broadcast(grid)),
-          inst.labels :+ "ts", inst.kind)
-      }
-      if (Set("rate", "increase", "changes", "resets")(fn))
-        return steppedPairs(fn, sel, ctx)
-      if (fn == "delta" || fn == "last_over_time")
-        return steppedStruct(fn, sel, ctx)
-      if (fn == "deriv")
-        return steppedDeriv(sel, ctx)
-      if (fn == "irate" || fn == "idelta")
-        return steppedIrate(fn, sel, ctx)
-      if (fn.startsWith("ts_of_"))
-        return steppedTsOf(fn, sel, ctx)
-      if (!SteppedFns(fn)) throw new IllegalArgumentException(
-        s"$fn needs per-step sample windows; stepped mode supports " +
-          s"rate, increase, changes, resets, delta, last_over_time, deriv, " +
-          SteppedFns.mkString(", "))
-      return steppedOverTime(fn, sel, ctx)
-    }
+    val sel = rangeSel(fn, arg)
+    if (ctx.grid.isDefined)
+      return atPinned(sel, ctx)(rangeFn(fn, arg, _)).getOrElse(fn match {
+        case "rate" | "increase" | "changes" | "resets" => steppedPairs(fn, sel, ctx)
+        case "delta" | "last_over_time" => steppedStruct(fn, sel, ctx)
+        case "deriv" => steppedDeriv(sel, ctx)
+        case "irate" | "idelta" => steppedIrate(fn, sel, ctx)
+        case f if TsOfFns(f) => steppedTsOf(fn, sel, ctx)
+        case f if SteppedFns(f) => steppedOverTime(fn, sel, ctx)
+        case other => throw new IllegalArgumentException(s"unknown function '$other'")
+      })
     val (from, to) = window(sel, ctx)
     val L = ctx.labelCols
     def partials: DataFrame =
       Labels.selectRangeAgg(ctx.chunks, L, matcherString(sel.matchers), from, to)
+    def perSeries: RelationalGroupedDataset =
+      decoded(sel, from, to, ctx).groupBy(L.map(col): _*)
     def out(c: Column, kind: ValKind, src: DataFrame): Vec =
       Vec(src.select(L.map(col) :+ c.as("value"): _*), L, kind)
 
@@ -2216,107 +2323,18 @@ object Promql {
         out(sqrt((col("n") * col("sumsq_cents") - col("sum_cents") * col("sum_cents"))
           .cast("double") / (col("n") * col("n") * lit(10000.0)).cast("double")), Dbl, partials)
       case "last_over_time" =>
-        val pts = decoded(sel, from, to, ctx)
-        out(col("last.cents"), Cents,
-          pts.groupBy(L.map(col): _*).agg(max(struct(col("ts"), col("cents"))).as("last")))
-      // Prometheus 3.1 experimental `ts_of_*`: the TIMESTAMP of the
-      // window's last / minimum / maximum sample — one (value, ts)
-      // struct extreme per series off the same decode last_over_time
-      // pays. Value ties resolve to the LATEST sample (max struct on
-      // (cents, ts); the min arm negates ts inside the struct so ties
-      // still answer with the latest), integer seconds end-to-end
-      case "ts_of_last_over_time" =>
-        val pts = decoded(sel, from, to, ctx)
-        out(col("__t"), Count,
-          pts.groupBy(L.map(col): _*).agg(max(col("ts")).as("__t")))
-      case "ts_of_max_over_time" =>
-        val pts = decoded(sel, from, to, ctx)
-        out(col("__m.ts"), Count,
-          pts.groupBy(L.map(col): _*)
-            .agg(max(struct(col("cents"), col("ts"))).as("__m")))
-      case "ts_of_min_over_time" =>
-        val pts = decoded(sel, from, to, ctx)
-        out(-col("__m.nts"), Count,
-          pts.groupBy(L.map(col): _*)
-            .agg(min(struct(col("cents"), (-col("ts")).as("nts"))).as("__m")))
-      case "delta" =>
-        // gauge last − first via one (ts, cents)-struct min/max partial agg
-        val pts = decoded(sel, from, to, ctx)
+        out(col("last.cents"), Cents, perSeries.agg(lastSample.as("last")))
+      case f if TsOfFns(f) =>
+        val x = if (fn == "ts_of_last_over_time") "__t" else "__m"
+        out(tsOfValue(fn, x), Count, perSeries.agg(tsOfExtreme(fn).as(x)))
+      case "delta" => // gauge last − first
         out(col("last.cents") - col("first.cents"), Cents,
-          pts.groupBy(L.map(col): _*).agg(
-            min(struct(col("ts"), col("cents"))).as("first"),
-            max(struct(col("ts"), col("cents"))).as("last")))
+          perSeries.agg(firstSample.as("first"), lastSample.as("last")))
       case "increase" | "rate" | "changes" | "resets" =>
-        val pts = decoded(sel, from, to, ctx)
-        // NATIVE-HISTOGRAM (nb) vectors: Prometheus detects counter
-        // resets at the HISTOGRAM grain — a drop in ANY arm (count or
-        // a bucket) means the whole sample re-based, so EVERY arm's
-        // delta at that instant is a post-restart re-base, not an
-        // increase. graft decomposes an nb store into per-arm counter
-        // series; per-arm positive-delta is identical when all arms
-        // drop together (the real restart) but diverges when one arm
-        // moves against the others (e.g. a bucket that already
-        // out-grew its pre-reset value across the restart gap) — so
-        // rate/increase over an nb vector zero the WHOLE histogram's
-        // deltas at any instant where any STRUCTURAL arm drops. The
-        // sum arm is excluded from the DETECTION (Prometheus reads
-        // count/bucket structure, never the sum, which legitimately
-        // falls when negative observations ride a gauge histogram —
-        // the signed mirrored-span store) but re-bases WITH the
-        // sample when a true reset fires. Both windows share one
-        // partitioning (the histogram identity), so the grain change
-        // costs a sort, never a second exchange. Arms share the
-        // scrape grid (native scrapes carry the full layout), which
-        // is what makes the same-instant frame the histogram sample.
-        // changes()/resets() stay PER-ARM by
-        // definition here: each arm is its own counter series in this
-        // data model (documented; Prometheus-side native resets() is
-        // the count-arm's resets, which this model expresses as
-        // resets(...{nb="count"})). Subquery-composed rate keeps
-        // per-arm semantics too — Prometheus never routes native
-        // histograms through subqueries (float-sample surface).
-        val histGrain = Set("rate", "increase")(fn) && L.contains("nb")
-        val lagged = if (histGrain) {
-          val hg = L.filterNot(_ == "nb")
-          def hgW = if (hg.isEmpty) Window.partitionBy()
-            else Window.partitionBy(hg.map(col): _*)
-          val w = hgW.orderBy("nb", "ts", "cents")
-          val rstW = hgW.orderBy("ts").rangeBetween(0, 0)
-          pts.withColumn("prev", lag("cents", 1).over(w))
-            .withColumn("__pnb", lag("nb", 1).over(w))
-            .filter(col("prev").isNotNull && col("__pnb") === col("nb"))
-            .withColumn("d", col("cents") - col("prev"))
-            .withColumn("d",
-              when(max(when(col("d") < 0 && col("nb") =!= "sum", 1)
-                  .otherwise(0)).over(rstW) === 1,
-                lit(0L)).otherwise(greatest(col("d"), lit(0L))))
-        } else {
-          val w = Window.partitionBy(L.map(col): _*).orderBy("ts", "cents")
-          pts.withColumn("prev", lag("cents", 1).over(w))
-            .filter(col("prev").isNotNull)
-            .withColumn("d", col("cents") - col("prev"))
-        }
-        val grouped = lagged.groupBy(L.map(col): _*)
-        fn match {
-          case "increase" => // reset-aware counter increase: sum of positive deltas
-            out(col("value"), Cents,
-              grouped.agg(sum(when(col("d") > 0, col("d")).otherwise(0L)).as("value")))
-          case "rate" => // increase cents with denom d·100: the per-second
-            // division happens ONCE at output, so sum(rate(..)) stays exact
-            out(col("value"), Exact((to - from + 1) * 100.0),
-              grouped.agg(sum(when(col("d") > 0, col("d")).otherwise(0L)).as("value")))
-          case "changes" =>
-            out(col("value"), Count,
-              grouped.agg(sum(when(col("d") =!= 0, 1L).otherwise(0L)).as("value")))
-          case "resets" =>
-            out(col("value"), Count,
-              grouped.agg(sum(when(col("d") < 0, 1L).otherwise(0L)).as("value")))
-        }
-      case "deriv" =>
-        // least-squares slope from exact integer sums (the ts_deriv
-        // discipline): BIGINT numerator/denominator, one division
-        out(col("__num").cast("double") / (lit(100.0) * col("__den")), Dbl,
-          regressionSums(sel, ctx)._1)
+        val lagged = counterDeltas(decoded(sel, from, to, ctx), L, fn, "prev", "d")
+        out(col("value"), counterKind(fn, (to - from + 1) * 100.0, Cents),
+          lagged.groupBy(L.map(col): _*).agg(counterFold(fn, col("d")).as("value")))
+      case "deriv" => out(derivSlope, Dbl, regressionSums(sel, ctx)._1)
       case "irate" | "idelta" =>
         // last TWO samples per series: rank window (ts, cents) desc —
         // two rows survive per series, one struct min/max recovers them
@@ -2326,70 +2344,40 @@ object Promql {
         val two = pts.withColumn("__rn", row_number().over(w))
           .filter(col("__rn") <= 2)
           .groupBy(L.map(col): _*)
-          .agg(max(struct(col("ts"), col("cents"))).as("__l"),
-            min(struct(col("ts"), col("cents"))).as("__p"),
-            count(lit(1)).as("__n"))
+          .agg(lastSample.as("__l"), firstSample.as("__p"), count(lit(1)).as("__n"))
           .filter(col("__n") === 2 && col("__l.ts") =!= col("__p.ts"))
-        fn match {
-          case "idelta" => out(col("__l.cents") - col("__p.cents"), Cents, two)
-          case _ => // irate: counter reset (last < prev) → increase = last
-            val incr = when(col("__l.cents") >= col("__p.cents"),
-              col("__l.cents") - col("__p.cents")).otherwise(col("__l.cents"))
-            out(incr.cast("double") /
-              ((col("__l.ts") - col("__p.ts")) * lit(100.0)).cast("double"), Dbl, two)
-        }
+        val (value, kind) = lastTwo(fn)
+        out(value, kind, two)
       case other => throw new IllegalArgumentException(s"unknown function '$other'")
     }
   }
 
-  /** Per-series exact regression partials over a range selector:
-    * n, Σt, Σv, Σtv, Σt² on the integer (relative-second, cent)
-    * grid; series with < 2 samples or a degenerate denominator are
-    * dropped (PromQL emits nothing for them). `t` is relative to the
-    * window start so products stay far under 2^63. */
+  /** Per-series exact regression partials over a range selector, `t`
+    * relative to the window start so products stay far under 2^63. */
   private def regressionSums(sel: VectorSel, ctx: Ctx): (DataFrame, Long, Long) = {
     val (from, to) = window(sel, ctx)
-    val L = ctx.labelCols
-    val g = decoded(sel, from, to, ctx)
+    val g = regressionPartials(decoded(sel, from, to, ctx)
       .withColumn("__t", col("ts") - lit(from))
-      .groupBy(L.map(col): _*)
-      .agg(count(lit(1)).as("__n"), sum("__t").as("__st"),
-        sum("cents").as("__sv"), sum(col("__t") * col("cents")).as("__stv"),
-        sum(col("__t") * col("__t")).as("__stt"))
-      .filter(col("__n") >= 2)
-      .withColumn("__num", col("__n") * col("__stv") - col("__st") * col("__sv"))
-      .withColumn("__den", col("__n") * col("__stt") - col("__st") * col("__st"))
-      .filter(col("__den") =!= 0)
-    (g, from, to)
+      .groupBy(ctx.labelCols.map(col): _*))
+    (regressionLine(g), from, to)
   }
 
   /** `predict_linear(sel[d], t)`: the regression line extrapolated t
-    * seconds past the evaluation instant — ŷ = v̄ + slope·(x − t̄),
-    * x = (d−1) + t relative seconds; three fixed divisions, mirrored
-    * op-for-op in the SQL oracle. */
+    * seconds past the evaluation instant, x = (d−1) + t relative
+    * seconds. */
   private def predictLinear(arg: Expr, tAhead: Double, ctx: Ctx): Vec = {
-    val sel = arg match {
-      case s: VectorSel => s
-      case _ => throw new IllegalArgumentException(
-        "predict_linear expects a range selector argument")
-    }
+    val sel = rangeSel("predict_linear", arg)
     // stepped mode: the deriv partials + the window's own prediction
     // instant — a full forecast panel from ONE decode
-    if (ctx.grid.isDefined) {
-      atPinned(sel, ctx)(c => predictLinear(arg, tAhead, c)) match {
-        case Some(v) => return v
-        case None => ()
+    atPinned(sel, ctx)(predictLinear(arg, tAhead, _)).getOrElse {
+      if (ctx.grid.isDefined) steppedDeriv(sel, ctx, Some(tAhead))
+      else {
+        val (g, from, to) = regressionSums(sel, ctx)
+        Vec(g.select(ctx.labelCols.map(col) :+
+          predicted(lit((to - from).toDouble + tAhead)).as("value"): _*),
+          ctx.labelCols, Dbl)
       }
-      return steppedDeriv(sel, ctx, Some(tAhead))
     }
-    val (g, from, to) = regressionSums(sel, ctx)
-    val x = lit((to - from).toDouble + tAhead)
-    val meanT = col("__st").cast("double") / col("__n")
-    val meanV = col("__sv").cast("double") / col("__n")
-    val slope = col("__num").cast("double") / col("__den")
-    val pred = (meanV + slope * (x - meanT)) / lit(100.0)
-    Vec(g.select(ctx.labelCols.map(col) :+ pred.as("value"): _*),
-      ctx.labelCols, Dbl)
   }
 
   /** Stepped `_over_time`: one compressed-domain bucket fold, each
@@ -2397,30 +2385,18 @@ object Promql {
     * serves, one hash aggregate. The result carries the step as a
     * `ts` label column. */
   private def steppedOverTime(fn: String, sel: VectorSel, ctx: Ctx): Vec = {
-    val (start0, step) = ctx.grid.get
-    val d = sel.range.getOrElse(
-      throw new IllegalArgumentException(s"$fn needs sel[duration]"))
-    require(d % step == 0 && d >= step,
-      s"window ${d}s must be a positive multiple of the ${step}s step grid")
-    val start = start0 - sel.offset // data-side grid; output ts stays un-offset
-    require(start % step == 0, "offset must preserve step alignment")
-    val end = ctx.evalTs - sel.offset
-    val k = d / step
-    val nSteps = (end - start) / step + 1
-    val tLast = start + (nSteps - 1) * step
+    val g = windowGrid(fn, sel, ctx)
     val L = ctx.labelCols
     // selector prune at the chunk-metadata scan, window-stat prune,
     // then ONE streaming bucket fold per surviving chunk
     val sub = Labels.select(ctx.chunks, L, matcherString(sel.matchers))
-      .filter(col("max_ts") >= start - d && col("min_ts") <= tLast - 1)
-    val parts = Ts.downsampleStatsCompressed(sub, L, step)
-      .filter(col("bucket") >= start - d && col("bucket") <= tLast - step)
-    // bucket b (aligned) lies inside windows i ∈ [j+1, j+k], j = (b−start)/step
+      .filter(col("max_ts") >= g.start - g.d && col("min_ts") <= g.tLast - 1)
+    val parts = Ts.downsampleStatsCompressed(sub, L, g.step)
+      .filter(col("bucket") >= g.start - g.d && col("bucket") <= g.tLast - g.step)
+    // the partial's bucket column is an aligned second, not a sample ts
     val withStep = parts
-      .withColumn("__j", expr(s"(bucket - ${start}L) div ${step}L"))
-      .withColumn("__i", explode(sequence(
-        greatest(col("__j") + lit(1L), lit(0L)),
-        least(col("__j") + lit(k), lit(nSteps - 1)))))
+      .withColumn("__j", expr(s"(bucket - ${g.start}L) div ${g.step}L"))
+      .withColumn("__i", g.windows(col("__j")))
     def grouped = withStep.groupBy(L.map(col) :+ col("__i"): _*)
     val (df, kind) = fn match {
       case "sum_over_time" => (grouped.agg(sum("sum_cents").as("value")), Cents)
@@ -2437,89 +2413,38 @@ object Promql {
           .cast("double") / (sum("n") * sum("n") * lit(10000.0))
         (grouped.agg((if (fn == "stddev_over_time") sqrt(v) else v).as("value")), Dbl)
     }
-    Vec(df.withColumn("ts", lit(start0) + col("__i") * lit(step))
-      .select((L :+ "ts" :+ "value").map(col): _*), L :+ "ts", kind)
+    Vec(g.stamp(df, L), L :+ "ts", kind)
   }
 
-  /** Stepped rate/increase: consecutive-sample pairs are formed ONCE
-    * over the grid's full coverage (the per-series sort ts_rate
-    * already pays), classified by (prev-bucket, cur-bucket), positive
-    * deltas aggregated per bucket pair, and each pair-partial exploded
-    * onto the windows containing BOTH endpoints — exact, because
-    * windows are unions of whole step buckets and window membership of
-    * a pair is bucket containment. Increase stays BIGINT cents per
-    * step; rate divides once at output (Exact(d·100)), so
-    * `sum by (…)(rate(x[d]))` is exact in stepped mode too. */
+  /** Stepped rate/increase/changes/resets: consecutive-sample pairs are
+    * formed ONCE over the grid's full coverage (the per-series sort
+    * ts_rate already pays), classified by (prev-bucket, cur-bucket),
+    * folded per bucket pair, and each pair-partial exploded onto the
+    * windows containing BOTH endpoints — exact, because windows are
+    * unions of whole step buckets and window membership of a pair is
+    * bucket containment. nb vectors rate/increase at the histogram
+    * grain here too ([[counterDeltas]]). */
   private def steppedPairs(fn: String, sel: VectorSel, ctx: Ctx): Vec = {
-    val (start0, step) = ctx.grid.get
-    val d = sel.range.getOrElse(
-      throw new IllegalArgumentException(s"$fn needs sel[duration]"))
-    require(d % step == 0 && d >= step,
-      s"window ${d}s must be a positive multiple of the ${step}s step grid")
-    val start = start0 - sel.offset
-    require(start % step == 0, "offset must preserve step alignment")
-    val end = ctx.evalTs - sel.offset
-    val k = d / step
-    val nSteps = (end - start) / step + 1
-    val tLast = start + (nSteps - 1) * step
+    val g = windowGrid(fn, sel, ctx)
     val L = ctx.labelCols
-    val j0 = start / step // bucket index origin (start is step-aligned)
-    val pts = decoded(sel, start - d, tLast - 1, ctx)
-    // nb vectors rate/increase at the HISTOGRAM grain in stepped mode
-    // too (a STRUCTURAL arm's drop re-bases the whole sample's deltas
-    // at that instant; the sum arm never triggers detection — see the
-    // instant lowering's note); arms share the scrape grid, so the
-    // same-ts range frame IS the histogram sample, and the shared
-    // partitioning keeps it one exchange
-    val histGrain = Set("rate", "increase")(fn) && L.contains("nb")
-    val lagged = if (histGrain) {
-      val hg = L.filterNot(_ == "nb")
-      def hgW = if (hg.isEmpty) Window.partitionBy()
-        else Window.partitionBy(hg.map(col): _*)
-      val w = hgW.orderBy("nb", "ts", "cents")
-      val rstW = hgW.orderBy("ts").rangeBetween(0, 0)
-      pts.withColumn("__pts", lag("ts", 1).over(w))
-        .withColumn("__pc", lag("cents", 1).over(w))
-        .withColumn("__pnb", lag("nb", 1).over(w))
-        .filter(col("__pts").isNotNull && col("__pnb") === col("nb"))
-        .withColumn("__d", col("cents") - col("__pc"))
-        .withColumn("__d",
-          when(max(when(col("__d") < 0 && col("nb") =!= "sum", 1)
-              .otherwise(0)).over(rstW) === 1,
-            lit(0L)).otherwise(greatest(col("__d"), lit(0L))))
-    } else {
-      val w = Window.partitionBy(L.map(col): _*).orderBy("ts", "cents")
-      pts.withColumn("__pts", lag("ts", 1).over(w))
-        .withColumn("__pc", lag("cents", 1).over(w))
-        .filter(col("__pts").isNotNull)
-        .withColumn("__d", col("cents") - col("__pc"))
-    }
+    val lagged = counterDeltas(g.samples(sel, ctx), L, fn, "__pc", "__d",
+      prevTs = Some("__pts"))
     val pairs = lagged
-      .withColumn("__jp", expr(s"(__pts div ${step}L) - ${j0}L"))
-      .withColumn("__jc", expr(s"(ts div ${step}L) - ${j0}L"))
+      .withColumn("__jp", g.bucket("__pts"))
+      .withColumn("__jc", g.bucket("ts"))
       // a pair spanning >= k buckets fits in no window
-      .filter(col("__jc") - col("__jp") < k)
+      .filter(col("__jc") - col("__jp") < g.k)
       .groupBy(L.map(col) :+ col("__jp") :+ col("__jc"): _*)
-      .agg((fn match {
-        case "increase" | "rate" => sum(when(col("__d") > 0, col("__d")).otherwise(0L))
-        case "changes" => sum(when(col("__d") =!= 0, 1L).otherwise(0L))
-        case "resets" => sum(when(col("__d") < 0, 1L).otherwise(0L))
-      }).as("__inc"))
+      .agg(counterFold(fn, col("__d")).as("__inc"))
     // windows containing buckets [jp, jc]: i in [jc+1, jp+k]
     val perStep = pairs
       .withColumn("__lo", greatest(col("__jc") + lit(1L), lit(0L)))
-      .withColumn("__hi", least(col("__jp") + lit(k), lit(nSteps - 1)))
+      .withColumn("__hi", least(col("__jp") + lit(g.k), lit(g.nSteps - 1)))
       .filter(col("__lo") <= col("__hi"))
       .withColumn("__i", explode(sequence(col("__lo"), col("__hi"))))
       .groupBy(L.map(col) :+ col("__i"): _*)
       .agg(sum("__inc").as("value"))
-      .withColumn("ts", lit(start0) + col("__i") * lit(step))
-      .select((L :+ "ts" :+ "value").map(col): _*)
-    Vec(perStep, L :+ "ts", fn match {
-      case "rate" => Exact(d * 100.0)
-      case "increase" => Cents
-      case _ => Count // changes / resets
-    })
+    Vec(g.stamp(perStep, L), L :+ "ts", counterKind(fn, g.d * 100.0, Cents))
   }
 
   /** Stepped delta / last_over_time: per-(series, bucket) FIRST and
@@ -2528,84 +2453,41 @@ object Promql {
     * recover the window's first/last sample exactly (bucket time
     * ranges are disjoint, so struct order == time order). */
   private def steppedStruct(fn: String, sel: VectorSel, ctx: Ctx): Vec = {
-    val (start0, step) = ctx.grid.get
-    val d = sel.range.getOrElse(
-      throw new IllegalArgumentException(s"$fn needs sel[duration]"))
-    require(d % step == 0 && d >= step,
-      s"window ${d}s must be a positive multiple of the ${step}s step grid")
-    val start = start0 - sel.offset
-    require(start % step == 0, "offset must preserve step alignment")
-    val end = ctx.evalTs - sel.offset
-    val k = d / step
-    val nSteps = (end - start) / step + 1
-    val tLast = start + (nSteps - 1) * step
+    val g = windowGrid(fn, sel, ctx)
     val L = ctx.labelCols
-    val j0 = start / step
-    val perBucket = decoded(sel, start - d, tLast - 1, ctx)
-      .withColumn("__j", expr(s"(ts div ${step}L) - ${j0}L"))
+    val perBucket = g.samples(sel, ctx)
+      .withColumn("__j", g.bucket("ts"))
       .groupBy(L.map(col) :+ col("__j"): _*)
-      .agg(min(struct(col("ts"), col("cents"))).as("__first"),
-        max(struct(col("ts"), col("cents"))).as("__last"))
+      .agg(firstSample.as("__first"), lastSample.as("__last"))
     val perStep = perBucket
-      .withColumn("__i", explode(sequence(
-        greatest(col("__j") + lit(1L), lit(0L)),
-        least(col("__j") + lit(k), lit(nSteps - 1)))))
+      .withColumn("__i", g.windows(col("__j")))
       .groupBy(L.map(col) :+ col("__i"): _*)
       .agg(min("__first").as("__wf"), max("__last").as("__wl"))
       .withColumn("value", fn match {
         case "delta" => col("__wl.cents") - col("__wf.cents")
         case _ => col("__wl.cents") // last_over_time
       })
-      .withColumn("ts", lit(start0) + col("__i") * lit(step))
-      .select((L :+ "ts" :+ "value").map(col): _*)
-    Vec(perStep, L :+ "ts", Cents)
+    Vec(g.stamp(perStep, L), L :+ "ts", Cents)
   }
 
   /** Stepped `ts_of_{last,max,min}_over_time`: per-(series, bucket)
-    * struct extremes COMPOSE — a window's extreme sample is among its
-    * buckets' extremes — so one decode feeds bucket partials that
-    * explode onto their ≤ k covering windows, one extreme per
-    * (series, step). Same tie contract as the instant path (value
-    * ties answer the latest sample); integer seconds end-to-end. */
+    * [[tsOfExtreme]] partials off one decode explode onto their ≤ k
+    * covering windows, one extreme per (series, step). */
   private def steppedTsOf(fn: String, sel: VectorSel, ctx: Ctx): Vec = {
-    val (start0, step) = ctx.grid.get
-    val d = sel.range.getOrElse(
-      throw new IllegalArgumentException(s"$fn needs sel[duration]"))
-    require(d % step == 0 && d >= step,
-      s"window ${d}s must be a positive multiple of the ${step}s step grid")
-    val start = start0 - sel.offset
-    require(start % step == 0, "offset must preserve step alignment")
-    val end = ctx.evalTs - sel.offset
-    val k = d / step
-    val nSteps = (end - start) / step + 1
-    val tLast = start + (nSteps - 1) * step
+    val g = windowGrid(fn, sel, ctx)
     val L = ctx.labelCols
-    val j0 = start / step
-    val bucketAgg = fn match {
-      case "ts_of_last_over_time" => max(col("ts"))
-      case "ts_of_max_over_time" => max(struct(col("cents"), col("ts")))
-      case _ => min(struct(col("cents"), (-col("ts")).as("nts")))
-    }
-    val perBucket = decoded(sel, start - d, tLast - 1, ctx)
-      .withColumn("__j", expr(s"(ts div ${step}L) - ${j0}L"))
+    val perBucket = g.samples(sel, ctx)
+      .withColumn("__j", g.bucket("ts"))
       .groupBy(L.map(col) :+ col("__j"): _*)
-      .agg(bucketAgg.as("__x"))
+      .agg(tsOfExtreme(fn).as("__x"))
     val windowAgg =
       if (fn == "ts_of_min_over_time") min(col("__x")) else max(col("__x"))
     val perStep = perBucket
-      .withColumn("__i", explode(sequence(
-        greatest(col("__j") + lit(1L), lit(0L)),
-        least(col("__j") + lit(k), lit(nSteps - 1)))))
+      .withColumn("__i", g.windows(col("__j")))
       .groupBy(L.map(col) :+ col("__i"): _*)
       .agg(windowAgg.as("__w"))
-      .withColumn("value", fn match {
-        case "ts_of_last_over_time" => col("__w")
-        case "ts_of_max_over_time" => col("__w.ts")
-        case _ => -col("__w.nts")
-      })
-      .withColumn("ts", lit(start0) + col("__i") * lit(step))
-      .select((L :+ "ts" :+ "value").map(col): _*)
-    Vec(perStep, L :+ "ts", Count)
+      .withColumn("value", tsOfValue(fn, "__w"))
+    Vec(g.stamp(perStep, L), L :+ "ts", Count)
   }
 
   /** Stepped irate/idelta — the instantaneous-rate panel: each window
@@ -2617,109 +2499,59 @@ object Promql {
     * as the instant path: (ts, cents) struct order, windows whose two
     * survivors share a timestamp emit nothing. */
   private def steppedIrate(fn: String, sel: VectorSel, ctx: Ctx): Vec = {
-    val (start0, step) = ctx.grid.get
-    val d = sel.range.getOrElse(
-      throw new IllegalArgumentException(s"$fn needs sel[duration]"))
-    require(d % step == 0 && d >= step,
-      s"window ${d}s must be a positive multiple of the ${step}s step grid")
-    val start = start0 - sel.offset
-    require(start % step == 0, "offset must preserve step alignment")
-    val end = ctx.evalTs - sel.offset
-    val k = d / step
-    val nSteps = (end - start) / step + 1
-    val tLast = start + (nSteps - 1) * step
+    val g = windowGrid(fn, sel, ctx)
     val L = ctx.labelCols
-    val j0 = start / step
     def top2(c: Column): Column = slice(reverse(sort_array(c)), 1, 2)
-    val perBucket = decoded(sel, start - d, tLast - 1, ctx)
-      .withColumn("__j", expr(s"(ts div ${step}L) - ${j0}L"))
+    val perBucket = g.samples(sel, ctx)
+      .withColumn("__j", g.bucket("ts"))
       .groupBy(L.map(col) :+ col("__j"): _*)
       .agg(top2(collect_list(struct(col("ts"), col("cents")))).as("__t2"))
     val perStep = perBucket
-      .withColumn("__i", explode(sequence(
-        greatest(col("__j") + lit(1L), lit(0L)),
-        least(col("__j") + lit(k), lit(nSteps - 1)))))
+      .withColumn("__i", g.windows(col("__j")))
       .groupBy(L.map(col) :+ col("__i"): _*)
       .agg(top2(flatten(collect_list(col("__t2")))).as("__t2"))
       .filter(size(col("__t2")) === 2)
       .withColumn("__l", element_at(col("__t2"), 1))
       .withColumn("__p", element_at(col("__t2"), 2))
       .filter(col("__l.ts") =!= col("__p.ts"))
-      .withColumn("ts", lit(start0) + col("__i") * lit(step))
-    val outCols = (L :+ "ts").map(col)
-    fn match {
-      case "idelta" =>
-        Vec(perStep.select(outCols :+
-          (col("__l.cents") - col("__p.cents")).as("value"): _*), L :+ "ts", Cents)
-      case _ => // irate: counter reset (last < prev) → increase = last
-        val incr = when(col("__l.cents") >= col("__p.cents"),
-          col("__l.cents") - col("__p.cents")).otherwise(col("__l.cents"))
-        Vec(perStep.select(outCols :+ (incr.cast("double") /
-          ((col("__l.ts") - col("__p.ts")) * lit(100.0)).cast("double"))
-          .as("value"): _*), L :+ "ts", Dbl)
-    }
+      .withColumn("ts", g.stepTs)
+    val (value, kind) = lastTwo(fn)
+    Vec(perStep.select((L :+ "ts").map(col) :+ value.as("value"): _*), L :+ "ts", kind)
   }
 
   /** Stepped deriv: per-(series, bucket) exact regression partials
-    * (n, Σt, Σv, Σtv, Σt² on the integer grid) off ONE decode,
-    * exploded onto the covering windows and summed — VALID because the
-    * least-squares slope is shift-invariant in t EXACTLY in integer
-    * arithmetic (n·Σtv − Σt·Σv and n·Σt² − (Σt)² both cancel any
-    * common t offset), so partials with one global origin compose for
-    * every window. One division per (series, step) at output. */
+    * off ONE decode, exploded onto the covering windows and summed —
+    * VALID because the least-squares slope is shift-invariant in t
+    * EXACTLY in integer arithmetic (n·Σtv − Σt·Σv and n·Σt² − (Σt)²
+    * both cancel any common t offset), so partials with one global
+    * origin compose for every window. One division per (series, step)
+    * at output. */
   private def steppedDeriv(sel: VectorSel, ctx: Ctx,
                            horizon: Option[Double] = None): Vec = {
     // callers (rangeFn, predictLinear) lower @-pinned selectors via
     // atPinned before reaching here
     require(sel.at.isEmpty, "@-pinned selector reached a stepped lowering")
-    val (start0, step) = ctx.grid.get
-    val d = sel.range.getOrElse(
-      throw new IllegalArgumentException("deriv needs sel[duration]"))
-    require(d % step == 0 && d >= step,
-      s"window ${d}s must be a positive multiple of the ${step}s step grid")
-    val start = start0 - sel.offset
-    require(start % step == 0, "offset must preserve step alignment")
-    val end = ctx.evalTs - sel.offset
-    val k = d / step
-    val nSteps = (end - start) / step + 1
-    val tLast = start + (nSteps - 1) * step
+    val g = windowGrid("deriv", sel, ctx)
     val L = ctx.labelCols
-    val j0 = start / step
-    val base = start - d // one global t origin; slope is shift-invariant
-    val perBucket = decoded(sel, start - d, tLast - 1, ctx)
+    val base = g.start - g.d // one global t origin; slope is shift-invariant
+    val perBucket = regressionPartials(g.samples(sel, ctx)
       .withColumn("__t", col("ts") - lit(base))
-      .withColumn("__j", expr(s"(ts div ${step}L) - ${j0}L"))
-      .groupBy(L.map(col) :+ col("__j"): _*)
-      .agg(count(lit(1)).as("__n"), sum("__t").as("__st"),
-        sum("cents").as("__sv"), sum(col("__t") * col("cents")).as("__stv"),
-        sum(col("__t") * col("__t")).as("__stt"))
-    val perStep = perBucket
-      .withColumn("__i", explode(sequence(
-        greatest(col("__j") + lit(1L), lit(0L)),
-        least(col("__j") + lit(k), lit(nSteps - 1)))))
+      .withColumn("__j", g.bucket("ts"))
+      .groupBy(L.map(col) :+ col("__j"): _*))
+    val perStep = regressionLine(perBucket
+      .withColumn("__i", g.windows(col("__j")))
       .groupBy(L.map(col) :+ col("__i"): _*)
       .agg(sum("__n").as("__n"), sum("__st").as("__st"), sum("__sv").as("__sv"),
-        sum("__stv").as("__stv"), sum("__stt").as("__stt"))
-      .filter(col("__n") >= 2)
-      .withColumn("__num", col("__n") * col("__stv") - col("__st") * col("__sv"))
-      .withColumn("__den", col("__n") * col("__stt") - col("__st") * col("__st"))
-      .filter(col("__den") =!= 0)
+        sum("__stv").as("__stv"), sum("__stt").as("__stt")))
       .withColumn("value", horizon match {
-        case None => col("__num").cast("double") / (lit(100.0) * col("__den"))
+        case None => derivSlope
+        // predict_linear at x = the window's own eval instant + h, on
+        // the ONE global origin the partials use — the integer part
+        // stays exact, h lands in a single double addition
         case Some(h) =>
-          // predict_linear: ŷ = v̄ + slope·(x − t̄) at x = the window's
-          // own eval instant + h, all relative to the ONE global
-          // origin the partials use — the integer part stays exact,
-          // h lands in a single double addition
-          val meanT = col("__st").cast("double") / col("__n")
-          val meanV = col("__sv").cast("double") / col("__n")
-          val slope = col("__num").cast("double") / col("__den")
-          val x = (col("__i") * lit(step) + lit(d - 1L)).cast("double") + lit(h)
-          (meanV + slope * (x - meanT)) / lit(100.0)
+          predicted((col("__i") * lit(g.step) + lit(g.d - 1L)).cast("double") + lit(h))
       })
-      .withColumn("ts", lit(start0) + col("__i") * lit(step))
-      .select((L :+ "ts" :+ "value").map(col): _*)
-    Vec(perStep, L :+ "ts", Dbl)
+    Vec(g.stamp(perStep, L), L :+ "ts", Dbl)
   }
 
   /** Range function over a subquery `fn(expr[d:step])`: the inner
@@ -2822,16 +2654,8 @@ object Promql {
         val lagged = samples.withColumn("__p", lag("value", 1).over(w))
           .filter(col("__p").isNotNull)
           .withColumn("__d", col("value") - col("__p"))
-        val folded = lagged.groupBy(L.map(col): _*).agg((fn match {
-          case "rate" | "increase" => sum(when(col("__d") > 0, col("__d")).otherwise(0L))
-          case "changes" => sum(when(col("__d") =!= 0, 1L).otherwise(0L))
-          case "resets" => sum(when(col("__d") < 0, 1L).otherwise(0L))
-        }).as("value"))
-        out(folded, fn match {
-          case "rate" => Exact(dn * sq.range)
-          case "increase" => kind
-          case _ => Count
-        })
+        out(lagged.groupBy(L.map(col): _*).agg(counterFold(fn, col("__d")).as("value")),
+          counterKind(fn, dn * sq.range, kind))
       case other => throw new IllegalArgumentException(
         s"$other cannot consume a subquery")
     }

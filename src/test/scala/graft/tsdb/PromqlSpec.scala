@@ -2112,6 +2112,34 @@ class PromqlSpec extends AnyFunSuite {
       assert(g.nonEmpty && g.keySet == want.keySet, fn)
       want.foreach { case (k, v) => assert(g(k) == v, s"$fn $k") }
     }
+    // the decode-based functions at the window edge: `eval` at T−1 and
+    // `evalRange`'s step T both read [T−d, T−1], so the two lowerings
+    // must agree exactly whatever sits on a step-aligned second
+    // (7d windows on a 1d grid: this sparse corpus needs the width for
+    // most series to hold the >= 2 samples rate/deriv/holt_winters need)
+    val steps = Seq(EvalTs - 2 * 86400L, EvalTs - 86400L, EvalTs)
+    for (q <- Seq("rate(view[7d])", "increase(view[7d])", "changes(view[7d])",
+        "resets(view[7d])", "delta(view[7d])", "last_over_time(view[7d])",
+        "deriv(view[7d])", "predict_linear(view[7d], 1h)",
+        "quantile_over_time(0.9, view[7d])", "holt_winters(view[7d], 0.5, 0.5)")) {
+      val g = Promql.evalRange(chunks, labelCols, q, steps.head, steps.last, 86400L)
+        .collect().map(r => ((r.getString(0), r.getString(1), r.getString(2),
+          r.getAs[Long]("ts")), r.getAs[Double]("value"))).toMap
+      val want = steps.flatMap { t =>
+        Promql.eval(chunks, labelCols, q, t - 1).collect()
+          .map(r => ((r.getString(0), r.getString(1), r.getString(2), t),
+            r.getAs[Double]("value")))
+      }.toMap
+      assert(g.nonEmpty && g.keySet == want.keySet, q)
+      // predict_linear's mean time t̄ is one double division on each
+      // arm's own origin (window start vs the grid's), so the two
+      // roundings may differ in the last place; every other result is
+      // exact integer math plus the same fixed IEEE ops
+      val relTol = if (q.startsWith("predict_linear")) 1e-12 else 0.0
+      want.foreach { case (k, v) =>
+        assert(math.abs(g(k) - v) <= relTol * math.abs(v), s"$q $k: ${g(k)} vs $v")
+      }
+    }
   }
 
   // ===== round-14: mad_over_time =====
