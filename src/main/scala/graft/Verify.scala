@@ -47,7 +47,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // a filtered run writes only its own keys' SQL, so the DuckDB check
+    // compares exactly the keys that ran
+    val oracle =
+      if (only.isEmpty) SparkEntry.oracleSql else SparkEntry.oracleSql.filter(kv => only(kv._1))
+    val json = oracle
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // publish the measured recall numbers (quality_recall's rows) as a

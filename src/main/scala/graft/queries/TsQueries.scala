@@ -36,7 +36,7 @@ object TsQueries {
     // needs the gorilla functions in this session's registry
     graft.functions.registerAll(s)
     val path = storePath(dir)
-    if (!new java.io.File(path, "_SUCCESS").exists())
+    if (!committed(s, path))
       Ts.writeStore(chunks(s, dir), path)
     Ts.readStore(s, path, fromSec, toSec)
   }
@@ -69,7 +69,7 @@ object TsQueries {
                          toSec: Long = Long.MaxValue): DataFrame = synchronized {
     graft.functions.registerAll(s)
     val path = storePath(dir) + "_lbl"
-    if (!new java.io.File(path, "_SUCCESS").exists())
+    if (!committed(s, path))
       Ts.writeStore(Ts.chunkify(labeledEvents(s, dir), labelCols, "ts", "value"), path)
     Ts.readStore(s, path, fromSec, toSec)
   }
@@ -104,7 +104,7 @@ object TsQueries {
   def recordedStoreChunks(s: SparkSession, dir: String): DataFrame = synchronized {
     graft.functions.registerAll(s)
     val path = storePath(dir) + "_rec"
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+    if (!committed(s, path)) {
       val rule = graft.tsdb.Rules.Recording("region:click:sum6h",
         "sum by (region) (sum_over_time(click[6h]))",
         RangeFrom, RangeTo, 7200L)
@@ -143,7 +143,7 @@ object TsQueries {
                       toSec: Long = Long.MaxValue): DataFrame = synchronized {
     graft.functions.registerAll(s)
     val path = storePath(dir) + "_hist"
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+    if (!committed(s, path)) {
       val ev0 = Tables(s, dir, "events")
       val ev = ev0.select(
         col("event_type").as("type"),
@@ -224,7 +224,7 @@ object TsQueries {
                                    centsOffset: Long,
                                    resetAtSec: Option[Long] = None): String = {
     val path = storePath(dir) + suffix
-    if (!new java.io.File(path, "_SUCCESS").exists())
+    if (!committed(s, path))
       buildNativeHistStoreFrom(s, Tables(s, dir, "events"), path, labelCols,
         schemaExpr, schemas, centsOffset, resetAtSec)
     path
@@ -438,7 +438,7 @@ object TsQueries {
                       toSec: Long = Long.MaxValue): DataFrame = synchronized {
     graft.functions.registerAll(s)
     val path = storePath(dir) + "_nhcb"
-    if (!new java.io.File(path, "_SUCCESS").exists())
+    if (!committed(s, path))
       buildNhcbStoreFrom(s, Tables(s, dir, "events"), path)
     readAdaptiveStore(s, path, fromSec, toSec)
   }
@@ -520,7 +520,7 @@ object TsQueries {
                               toSec: Long = Long.MaxValue): DataFrame = synchronized {
     graft.functions.registerAll(s)
     val path = storePath(dir) + "_nhcbstr"
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+    if (!committed(s, path)) {
       val work = path + "_work"
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
@@ -618,7 +618,7 @@ object TsQueries {
                                toSec: Long = Long.MaxValue): DataFrame = synchronized {
     graft.functions.registerAll(s)
     val path = storePath(dir) + "_histmig"
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+    if (!committed(s, path)) {
       val ev0 = Tables(s, dir, "events")
       val evAll = ev0.select(
         col("event_type").as("type"),
@@ -697,7 +697,7 @@ object TsQueries {
   def rollupStore(s: SparkSession, dir: String): DataFrame = synchronized {
     graft.functions.registerAll(s)
     val path = storePath(dir) + "_roll900"
-    if (!new java.io.File(path, "_SUCCESS").exists())
+    if (!committed(s, path))
       Ts.writeRollup(storeChunks(s, dir), series, path, bucketSec = 900)
     Ts.readRollup(s, path)
   }
@@ -713,7 +713,7 @@ object TsQueries {
   def mergeRollupStore(s: SparkSession, dir: String): DataFrame = synchronized {
     graft.functions.registerAll(s)
     val path = storePath(dir) + "_roll900m"
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+    if (!committed(s, path)) {
       val ch = storeChunks(s, dir)
       // 2024-01-10T12:00Z and 2024-01-20T06:00Z — both 2-h aligned,
       // both strictly inside a bucket_date the neighboring fold touches
@@ -736,6 +736,14 @@ object TsQueries {
     * (for SQL clients registering it via [[Ts.registerStoreView]]). */
   def storePathFor(dir: String): String = storePath(dir)
 
+  /** Whether a cached store at `path` finished its write: its root
+    * `_SUCCESS` marker, looked up through the Hadoop FileSystem API so
+    * the check holds on any filesystem, not only local disk. */
+  private def committed(s: SparkSession, path: String): Boolean = {
+    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
+    marker.getFileSystem(s.sparkContext.hadoopConfiguration).exists(marker)
+  }
+
   private def storePath(dir: String): String = {
     val src = new java.io.File(s"$dir/events.parquet")
     val files = if (src.isDirectory) src.listFiles().toSeq else Seq(src)
@@ -756,7 +764,7 @@ object TsQueries {
     graft.functions.registerAll(s)
     storeChunks(s, dir) // ensure the source store exists
     val path = storePath(dir) + "_del"
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+    if (!committed(s, path)) {
       val conf = s.sparkContext.hadoopConfiguration
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(conf)
       val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
@@ -790,7 +798,7 @@ object TsQueries {
     graft.functions.registerAll(s)
     storeChunks(s, dir) // ensure the source store exists
     val path = storePath(dir) + "_ups"
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+    if (!committed(s, path)) {
       val conf = s.sparkContext.hadoopConfiguration
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(conf)
       val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
@@ -812,7 +820,7 @@ object TsQueries {
   def compactedStorePath(s: SparkSession, dir: String): String = synchronized {
     graft.functions.registerAll(s)
     val path = storePath(dir) + "_cmp"
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+    if (!committed(s, path)) {
       val frag = storePath(dir) + "_frag"
       val ev = Tables(s, dir, "events")
       val half = pmod(xxhash64(col("event_id")), lit(2L))
@@ -836,7 +844,7 @@ object TsQueries {
     graft.functions.registerAll(s)
     storeChunks(s, dir) // ensure the source store exists
     val path = storePath(dir) + "_exp"
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+    if (!committed(s, path)) {
       val conf = s.sparkContext.hadoopConfiguration
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(conf)
       val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
@@ -1137,9 +1145,10 @@ object TsQueries {
         .select(col("user_id"), col("event_type"), col("bucket"), col("n"),
           col("sum_cents"), col("sumsq_cents"), col("avg_v"), col("var_cents"))
         .orderBy("user_id", "event_type", "bucket")),
-    // compressed-domain range aggregate off the store: covered chunks
-    // answered from header stats (no chunk bytes read), boundary chunks
-    // via a streaming in-range fold — no point materialization anywhere
+    // compressed-domain range aggregate off the store in one scan:
+    // covered chunks answered from header stats (never decoded),
+    // boundary chunks via a streaming in-range fold — no point
+    // materialization anywhere
     "ts_range_agg" -> ((s, dir) =>
       Ts.rangeAgg(storeChunks(s, dir, RangeFrom, RangeTo), series, RangeFrom, RangeTo)
         .orderBy("user_id", "event_type")),

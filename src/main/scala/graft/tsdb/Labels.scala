@@ -133,17 +133,21 @@ object Labels {
   /** Filter a labeled frame by a selector string, treating exactly
     * `labelCols` as the indexed labels (other matchers go through the
     * `labels` map — a label may not shadow a stat column). */
-  def select(df: DataFrame, labelCols: Seq[String], selector: String): DataFrame = {
-    val idx = labelCols.toSet
-    parse(selector).foldLeft(df)((d, m) => d.filter(predicate(d, m, idx)))
-  }
+  def select(df: DataFrame, labelCols: Seq[String], selector: String): DataFrame =
+    filterAll(df, parse(selector).map(predicate(df, _, labelCols.toSet)))
 
   /** Filter any frame whose COLUMNS are the labels (chunk store,
     * decoded points, rollup partials) by a selector string. Use the
     * 3-arg form when the frame also carries non-label columns a
     * matcher name could collide with. */
   def select(df: DataFrame, selector: String): DataFrame =
-    parse(selector).foldLeft(df)((d, m) => d.filter(predicate(d, m)))
+    filterAll(df, parse(selector).map(predicate(df, _)))
+
+  /** The matchers' predicates ANDed into ONE filter: one analysis of
+    * the frame instead of one per matcher (Catalyst combines adjacent
+    * filters anyway, so the optimized plan is the same). */
+  private def filterAll(df: DataFrame, preds: Seq[Column]): DataFrame =
+    if (preds.isEmpty) df else df.filter(preds.reduce(_ && _))
 
   /** PromQL label_values()/series-count meta-query (the first thing a
     * metrics UI's autocomplete fires): per label, every value with its
@@ -172,8 +176,8 @@ object Labels {
     * store: label predicates prune FIRST (pushed scans over chunk
     * METADATA — no chunk byte is read for a filtered-out series), then
     * the surviving chunks answer via the compressed-domain range
-    * kernel ([[Ts.rangeAgg]]: covered chunks from header stats, only
-    * boundary chunks decode). */
+    * kernel in one scan ([[Ts.rangeAgg]]: covered chunks from header
+    * stats and never decoded, only boundary chunks decode). */
   def selectRangeAgg(chunks: DataFrame, labelCols: Seq[String], selector: String,
                      fromSec: Long, toSec: Long): DataFrame =
     Ts.rangeAgg(select(chunks, labelCols, selector), labelCols, fromSec, toSec)

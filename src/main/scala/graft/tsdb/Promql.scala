@@ -697,13 +697,13 @@ object Promql {
    * second grid [t_i − d, t_i − 1] — exactly k = d/step whole
    * epoch-aligned step buckets (PromQL's half-open `(t−d, t]` shifted
    * one second), which is what keeps stepped evaluation
-   * COMPRESSED-DOMAIN: selector survivors fold ONCE into per-(series,
+   * COMPRESSED-DOMAIN: selector survivors fold ONCE into per-(chunk,
    * bucket) partials (`gorilla_chunk_bucket_agg` — one streaming
    * decode per chunk, never a point row), each partial serves ≤ k
    * steps (an explode onto its window indices), and one hash
    * aggregate assembles every window. Cost: chunks-of-selector +
-   * |series| · |buckets| · k partial rows — independent of point
-   * count past the fold, the shape a dashboard's 300-step panel
+   * |chunks| · |buckets per chunk| · k partial rows — independent of
+   * point count past the fold, the shape a dashboard's 300-step panel
    * needs at 100 TB.
    *
    * Requires `startTs % stepSec == 0` and, per range selector,
@@ -2381,36 +2381,39 @@ object Promql {
   }
 
   /** Stepped `_over_time`: one compressed-domain bucket fold, each
-    * per-(series, bucket) partial exploded onto the ≤ k windows it
-    * serves, one hash aggregate. The result carries the step as a
-    * `ts` label column. */
+    * per-(chunk, bucket) partial exploded onto the ≤ k windows it
+    * serves, one hash aggregate — count, long sums and min/max compose
+    * over any grouping of the chunk partials, so no per-(series,
+    * bucket) merge comes first. The result carries the step as a `ts`
+    * label column. */
   private def steppedOverTime(fn: String, sel: VectorSel, ctx: Ctx): Vec = {
     val g = windowGrid(fn, sel, ctx)
     val L = ctx.labelCols
     // selector prune at the chunk-metadata scan, window-stat prune,
     // then ONE streaming bucket fold per surviving chunk
-    val sub = Labels.select(ctx.chunks, L, matcherString(sel.matchers))
+    val withStep = Labels.select(ctx.chunks, L, matcherString(sel.matchers))
       .filter(col("max_ts") >= g.start - g.d && col("min_ts") <= g.tLast - 1)
-    val parts = Ts.downsampleStatsCompressed(sub, L, g.step)
-      .filter(col("bucket") >= g.start - g.d && col("bucket") <= g.tLast - g.step)
-    // the partial's bucket column is an aligned second, not a sample ts
-    val withStep = parts
-      .withColumn("__j", expr(s"(bucket - ${g.start}L) div ${g.step}L"))
+      .select(L.map(col) :+ explode(graft.functions.gorilla_chunk_bucket_agg(
+        col("chunk"), g.step, Ts.FixedScale)).as("__b"): _*)
+      .filter(col("__b.bucket") >= g.start - g.d && col("__b.bucket") <= g.tLast - g.step)
+      // the partial's bucket column is an aligned second, not a sample ts
+      .withColumn("__j", expr(s"(__b.bucket - ${g.start}L) div ${g.step}L"))
       .withColumn("__i", g.windows(col("__j")))
     def grouped = withStep.groupBy(L.map(col) :+ col("__i"): _*)
     val (df, kind) = fn match {
-      case "sum_over_time" => (grouped.agg(sum("sum_cents").as("value")), Cents)
-      case "count_over_time" => (grouped.agg(sum("n").as("value")), Count)
-      case "min_over_time" => (grouped.agg(min("min_v").as("value")), Dbl)
-      case "max_over_time" => (grouped.agg(max("max_v").as("value")), Dbl)
+      case "sum_over_time" => (grouped.agg(sum("__b.sum_fixed").as("value")), Cents)
+      case "count_over_time" => (grouped.agg(sum("__b.n").as("value")), Count)
+      case "min_over_time" => (grouped.agg(min("__b.min_v").as("value")), Dbl)
+      case "max_over_time" => (grouped.agg(max("__b.max_v").as("value")), Dbl)
       case "present_over_time" =>
         (grouped.agg(count(lit(1)).as("__c")).withColumn("value", lit(1L)), Count)
       case "avg_over_time" =>
-        (grouped.agg((sum("sum_cents").cast("double") /
-          (sum("n") * lit(100.0))).as("value")), Dbl)
+        (grouped.agg((sum("__b.sum_fixed").cast("double") /
+          (sum("__b.n") * lit(100.0))).as("value")), Dbl)
       case "stdvar_over_time" | "stddev_over_time" =>
-        val v = (sum("n") * sum("sumsq_cents") - sum("sum_cents") * sum("sum_cents"))
-          .cast("double") / (sum("n") * sum("n") * lit(10000.0))
+        val v = (sum("__b.n") * sum("__b.sumsq_fixed") -
+          sum("__b.sum_fixed") * sum("__b.sum_fixed"))
+          .cast("double") / (sum("__b.n") * sum("__b.n") * lit(10000.0))
         (grouped.agg((if (fn == "stddev_over_time") sqrt(v) else v).as("value")), Dbl)
     }
     Vec(g.stamp(df, L), L :+ "ts", kind)

@@ -322,44 +322,42 @@ object Ts {
    * Compressed-domain range aggregate: count/min/max/fixed-point-sum
    * over `[fromSec, toSec]` per series, WITHOUT materializing points.
    *
-   * Three tiers of work, each strictly cheaper than decoding:
+   * One scan, three tiers of work, each strictly cheaper than
+   * decoding:
    *  - chunks outside the range: eliminated by the (min_ts, max_ts)
    *    stat columns — pushed to the parquet scan, never read;
    *  - chunks fully inside the range: answered from the stored header
-   *    stats (n, min/max, sum_cents, sumsq_cents) with ZERO chunk-byte
-   *    reads — the
-   *    covered branch never references `chunk`, so column pruning
-   *    drops the bytes from its scan entirely;
+   *    stats (n, min/max, sum_cents, sumsq_cents) — covered chunks are
+   *    never decoded (their `chunk` column is read by the one scan, but
+   *    the `when` never reaches the kernel for them);
    *  - boundary chunks (straddling an endpoint): a streaming
    *    `gorilla_chunk_agg_range` pass — decode-and-fold, no point
    *    arrays, only for the at-most-two boundary windows per series.
+   *
+   * A covered/boundary union would read the store twice (Spark does
+   * not share parquet scans); one conditional projection reads it once.
    *
    * Generalizes the reference's compressed-read aggregation
    * (examples/csv_to_packed.rs:40-78) from whole-file to time ranges.
    */
   def rangeAgg(chunks: DataFrame, seriesCols: Seq[String],
                fromSec: Long, toSec: Long): DataFrame = {
-    val overlapping = chunks.filter(col("max_ts") >= fromSec && col("min_ts") <= toSec)
     val statCols = Seq("n", "min_ts", "max_ts", "min_v", "max_v",
       "sum_cents", "sumsq_cents")
-    val covered = overlapping
-      .filter(col("min_ts") >= fromSec && col("max_ts") <= toSec)
-      .select(seriesCols.map(col) ++ statCols.map(col): _*)
     // empty-in-range boundary chunks yield a NULL agg struct (not a
     // row filter: Catalyst would push `a.n > 0` below the Project and
     // evaluate the decode twice); null fields then vanish inside the
     // aggregates, and all-null groups are dropped afterwards
-    val boundary = overlapping
-      .filter(col("min_ts") < fromSec || col("max_ts") > toSec)
-      .select(seriesCols.map(col) :+
-        graft.functions.gorilla_chunk_agg_range(col("chunk"), fromSec, toSec).as("a"): _*)
-      .select(seriesCols.map(col) ++ statCols.map(c => col(s"a.$c").as(c)): _*)
-    covered.unionByName(boundary)
+    val a = when(col("min_ts") >= fromSec && col("max_ts") <= toSec,
+        struct(statCols.map(col): _*))
+      .otherwise(graft.functions.gorilla_chunk_agg_range(col("chunk"), fromSec, toSec))
+    chunks.filter(col("max_ts") >= fromSec && col("min_ts") <= toSec)
+      .select(seriesCols.map(col) :+ a.as("a"): _*)
       .groupBy(seriesCols.map(col): _*)
-      .agg(sum("n").as("n"),
-        min("min_ts").as("min_ts"), max("max_ts").as("max_ts"),
-        min("min_v").as("min_v"), max("max_v").as("max_v"),
-        sum("sum_cents").as("sum_cents"), sum("sumsq_cents").as("sumsq_cents"))
+      .agg(sum("a.n").as("n"),
+        min("a.min_ts").as("min_ts"), max("a.max_ts").as("max_ts"),
+        min("a.min_v").as("min_v"), max("a.max_v").as("max_v"),
+        sum("a.sum_cents").as("sum_cents"), sum("a.sumsq_cents").as("sumsq_cents"))
       .filter(col("n").isNotNull)
   }
 

@@ -200,11 +200,14 @@ class ExplainAllSpec extends AnyFunSuite {
       // decode
       "promql_range_histq_migration" -> (4, 0, 1),
       // keep_firing_for: fully compressed-domain (ZERO decode — the
-      // stepped sum_over_time filter answers from header partials);
-      // the 9 exchanges are the stepped assembly + for-window, island,
-      // fire and tail windows + the trueRows∪tails union + orderBy —
-      // all over grid-sized state rows, never point data
-      "promql_alert_keep" -> (9, 0, 0))
+      // stepped sum_over_time filter answers from bucket partials);
+      // the 7 exchanges are the stepped window assembly + sum by
+      // (region) + for-window, once in each of the trueRows and tails
+      // arms of the union (both arms plan the condition subtree), + the
+      // orderBy — all over grid-sized state rows, never point data.
+      // Stepped `_over_time` aggregates its chunk-bucket partials once
+      // per (series, window): no per-(series, bucket) exchange
+      "promql_alert_keep" -> (7, 0, 0))
     val failures = expected.flatMap { case (name, want) =>
       val got = shape(name)
       if (got != want)

@@ -287,6 +287,52 @@ class PromqlSpec extends AnyFunSuite {
     }
   }
 
+  test("stepped _over_time == per-step hand fold where buckets straddle chunks") {
+    import spark.implicits._
+    // 90-min buckets on 2-h chunks: buckets straddling a chunk edge get
+    // one partial per chunk, which the one window aggregate must merge
+    val base = 1704844800L // aligned to 7200 and 5400
+    val (step, d) = (5400L, 10800L)
+    val start = base + d
+    val end = start + 2 * step
+    val rows = for (h <- 1 to 3; j <- 0L until (end - base) / 47L
+                    if h != 3 || j * 47L < 7200L) yield {
+      val cents = (j * 7919L + h * 131L) % 20001L - 10000L
+      ("m", s"h$h", (base + j * 47L) * 1000000000L, cents / 100.0)
+    }
+    val L = Seq("type", "host")
+    val ch = Ts.chunkify(rows.toDF("type", "host", "ts", "v"), L, "ts", "v")
+    val pts = Labels.selectRange(ch, L, """{type="m"}""", start - d, end - 1)
+      .withColumn("cents", round(col("v") * 100).cast("long"))
+      .select("host", "ts", "v", "cents").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
+    def fold(w: Array[(String, Long, Double, Long)], fn: String): Double = {
+      val n = w.length.toLong
+      val (s, q) = (w.map(_._4).sum, w.map(p => p._4 * p._4).sum)
+      val variance = (n * q - s * s).toDouble / (n * n * 10000.0)
+      fn match {
+        case "sum" => s / 100.0
+        case "count" => n.toDouble
+        case "min" => w.map(_._3).min
+        case "max" => w.map(_._3).max
+        case "avg" => s.toDouble / (n * 100.0)
+        case "stdvar" => variance
+        case "stddev" => math.sqrt(variance)
+        case "present" => 1.0
+      }
+    }
+    for (fn <- Seq("sum", "count", "min", "max", "avg", "stdvar", "stddev", "present")) {
+      val got = Promql.evalRange(ch, L, s"${fn}_over_time(m[3h])", start, end, step)
+        .collect().map(r => ((r.getString(1), r.getLong(2)), r.getDouble(3))).toMap
+      val want = (0L to 2L).map(start + _ * step).flatMap { t =>
+        pts.filter(p => p._2 >= t - d && p._2 <= t - 1).groupBy(_._1)
+          .map { case (host, w) => (host, t) -> fold(w, fn) }
+      }.toMap
+      assert(want.keySet.map(_._1) == Set("h1", "h2", "h3"))
+      assert(got == want, fn)
+    }
+  }
+
   test("stepped rate == per-step pairs-in-window hand computation") {
     val start = 1704844800L; val step = 7200L; val d = 86400L
     val stepped = Promql.evalRange(chunks, labelCols,

@@ -518,21 +518,43 @@ class TsStoreSpec extends AnyFunSuite {
     assert(agg.nonEmpty && agg == baseline)
   }
 
-  test("store-backed rangeAgg reads zero chunk bytes for covered chunks") {
+  test("store-backed rangeAgg never decodes covered chunks, in one scan") {
     val ev = spark.read.parquet(s"$dir/events.parquet")
     val series = Seq("user_id", "event_type")
-    val path = java.nio.file.Files.createTempDirectory("graft-store-agg").toString
-    Ts.writeStore(Ts.chunkify(ev, series, "ts", "value"), path)
-    val from = 1704844800L
-    val to = 1705017600L
-    val agg = Ts.rangeAgg(Ts.readStore(spark, path, from, to), series, from, to)
-    val plan = agg.queryExecution.executedPlan.toString
-    // two parquet scans: the covered branch's scan must carry the stats
-    // (sum_cents) but NOT the chunk binary — column pruning keeps
-    // compressed bytes out of the stats-only path entirely
-    val scanCols = "FileScan parquet \\[[^\\]]*\\]".r.findAllIn(plan).toList
-    assert(scanCols.exists(s => s.contains("sum_cents") && !s.contains("chunk")),
-      s"no stats-only scan in:\n${scanCols.mkString("\n")}")
+    // off the 2-h chunk grid; the corpus's chunks hold about one point
+    // each, so one dense 10-min series adds chunks that straddle it
+    val from = 1704844800L + 3600L
+    val to = 1705017600L - 3600L
+    val tsType = ev.schema("ts").dataType
+    val dense = spark.range(from - 86400L, to + 86400L, 600L).select(
+      lit(-1L).cast(ev.schema("user_id").dataType).as("user_id"),
+      lit("dense").as("event_type"),
+      (if (tsType == org.apache.spark.sql.types.LongType) col("id") * 1000000000L
+       else timestamp_seconds(col("id")).cast(tsType)).as("ts"),
+      (pmod(col("id"), lit(997L)) / 10.0).as("value"))
+    val chunks = Ts.chunkify(ev.select("user_id", "event_type", "ts", "value")
+      .unionByName(dense), series, "ts", "value")
+    val root = java.nio.file.Files.createTempDirectory("graft-store-agg").toString
+    val covered = col("min_ts") >= from && col("max_ts") <= to
+    val straddles = col("max_ts") >= from && col("min_ts") <= to && !covered
+    // the same store with every covered chunk's bytes nulled: the
+    // range kernel is null-intolerant, so decoding any covered chunk
+    // would drop its points from the answer
+    Ts.writeStore(chunks, s"$root/intact")
+    Ts.writeStore(chunks.withColumn("chunk",
+      when(covered, lit(null).cast("binary")).otherwise(col("chunk"))), s"$root/nulled")
+    val nulled = Ts.readStore(spark, s"$root/nulled", from, to)
+    assert(nulled.filter(col("chunk").isNull).count() > 0)
+    assert(nulled.filter(straddles).count() > 0)
+    def agg(path: String) =
+      Ts.rangeAgg(Ts.readStore(spark, path, from, to), series, from, to)
+    val want = agg(s"$root/intact").orderBy(series.map(col): _*).collect().toSeq
+    assert(want.nonEmpty)
+    assert(agg(s"$root/nulled").orderBy(series.map(col): _*).collect().toSeq == want)
+    val plan = agg(s"$root/intact").queryExecution.executedPlan.toString
+    // Spark does not share parquet scans: covered and boundary chunks
+    // come out of ONE scan
+    assert("FileScan parquet".r.findAllIn(plan).size == 1, plan.take(2000))
     // and the stat-range guards + partition pruning are pushed to the scan
     assert(plan.contains("PushedFilters") && plan.contains("GreaterThanOrEqual(max_ts"),
       plan.take(2000))
