@@ -17,5 +17,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.plans.ChunkPruneRule)
     ext.injectOptimizerRule(_ => graft.plans.ChunkAggRule)
     ext.injectOptimizerRule(_ => graft.plans.ChunkBucketAggRule)
+    ext.injectQueryStagePrepRule(_ => graft.plans.SingleTaskAggRule)
   }
 }

@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSession
 /**
  * Dump the formatted physical plan of every registered query to a
  * markdown file — the artifact for reviewing shuffle counts, pushdown,
- * and codegen coverage across the whole surface.
+ * and codegen coverage across the whole surface. Masking expression
+ * ids (`#123`), `plan_id=` values and JVM identity hashes (`@1a2b3c`,
+ * `Lambda$12/0x…`) is enough to diff two dumps.
  * Usage: runMain graft.tools.ExplainAll [sfDir] [outFile]
  */
 object ExplainAll {
@@ -19,6 +21,10 @@ object ExplainAll {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // print DataFilters/PushedFilters whole: a cut string moves with
+      // the digits of the expression ids, so two dumps would differ
+      // beyond their ids
+      .config("spark.sql.maxMetadataStringLength", Int.MaxValue.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -156,25 +156,20 @@ object Rules {
             .orderBy(col("ts"))
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)) === 1)
       .withColumn("__next", lead(col("ts"), 1).over(ordW))
-    val outCols = labels.map(col) ++
-      Seq(col("ts"), col("value"), col("state"), col("cond"))
-    val trueRows = marked
-      .withColumn("state", when(col("__fire"), lit("firing"))
-        .otherwise(lit("pending")))
-      .withColumn("cond", lit(true))
-      .select(outCols: _*)
-    val tails = marked.filter(col("__fire"))
+    // one explode per condition row: j = 0 is the row itself, j = 1..__m
+    // (firing rows only) are its hysteresis tails, so the condition
+    // subtree is planned once
+    marked
       .withColumn("__lt", least(col("ts") + k,
         coalesce(col("__next") - rule.stepSec, col("ts") + k),
         lit(rule.endTs)))
-      .withColumn("__m",
-        ((col("__lt") - col("ts")) / lit(rule.stepSec)).cast("long"))
-      .filter(col("__m") >= 1)
-      .withColumn("__j", explode(sequence(lit(1L), col("__m"))))
+      .withColumn("__m", when(col("__fire"), greatest(lit(0L),
+        ((col("__lt") - col("ts")) / lit(rule.stepSec)).cast("long"))).otherwise(0L))
+      .withColumn("__j", explode(sequence(lit(0L), col("__m"))))
+      .withColumn("state", when(col("__fire"), lit("firing")).otherwise(lit("pending")))
+      .withColumn("cond", col("__j") === 0)
       .withColumn("ts", col("ts") + col("__j") * rule.stepSec)
-      .withColumn("state", lit("firing"))
-      .withColumn("cond", lit(false))
-      .select(outCols: _*)
-    trueRows.unionByName(tails)
+      .select(labels.map(col) ++
+        Seq(col("ts"), col("value"), col("state"), col("cond")): _*)
   }
 }

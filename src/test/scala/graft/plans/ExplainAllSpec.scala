@@ -20,16 +20,33 @@ class ExplainAllSpec extends AnyFunSuite {
 
   /** (shuffle exchanges, broadcast exchanges, gorilla_decode calls) of
     * the pre-execution physical plan. AQE may coalesce at runtime, but
-    * the initial plan is what the optimizer committed to. */
-  private def shape(name: String): (Int, Int, Int) = {
-    val plan = SparkEntry.queries(name)(spark, dir).queryExecution
-      .executedPlan.toString
-    val shuffles = "(?m)^[^\\n]*\\bExchange (hash|range|Single)".r
-      .findAllIn(plan).size
-    val bcasts = "BroadcastExchange".r.findAllIn(plan).size
-    val decodes = "gorilla_decode".r.findAllIn(plan).size
-    (shuffles, bcasts, decodes)
+    * the initial plan is what the optimizer committed to.
+    *
+    * Every sf0.001 table is one file, which [[SingleTaskAggRule]] reads
+    * as one partition and so plans without its partial→final aggregate
+    * shuffles. By default `shape` reads files in 1 KB splits, so the
+    * pins below hold the multi-partition plan that larger inputs get;
+    * `split = false` shapes the plan of the default read. */
+  private def shape(name: String, split: Boolean = true): (Int, Int, Int) = {
+    if (split) spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+    try {
+      val plan = SparkEntry.queries(name)(spark, dir).queryExecution
+        .executedPlan.toString
+      val shuffles = "(?m)^[^\\n]*\\bExchange (hash|range|Single)".r
+        .findAllIn(plan).size
+      val bcasts = "BroadcastExchange".r.findAllIn(plan).size
+      val decodes = "gorilla_decode".r.findAllIn(plan).size
+      (shuffles, bcasts, decodes)
+    } finally if (split) spark.conf.unset("spark.sql.files.maxPartitionBytes")
   }
+
+  private def mismatches(expected: Map[String, (Int, Int, Int)], split: Boolean) =
+    expected.flatMap { case (name, want) =>
+      val got = shape(name, split)
+      if (got != want)
+        Some(s"$name: expected (shuffles, bcasts, decodes)=$want, got $got")
+      else None
+    }
 
   test("plan-shape snapshots of the expensive queries hold") {
     // name -> (shuffles, broadcasts, decode-call sites), with the why
@@ -201,19 +218,53 @@ class ExplainAllSpec extends AnyFunSuite {
       "promql_range_histq_migration" -> (4, 0, 1),
       // keep_firing_for: fully compressed-domain (ZERO decode — the
       // stepped sum_over_time filter answers from bucket partials);
-      // the 7 exchanges are the stepped window assembly + sum by
-      // (region) + for-window, once in each of the trueRows and tails
-      // arms of the union (both arms plan the condition subtree), + the
-      // orderBy — all over grid-sized state rows, never point data.
+      // the 4 exchanges are the stepped window assembly + sum by
+      // (region) + for-window, + the orderBy — all over grid-sized
+      // state rows, never point data. The condition rows and their
+      // hysteresis tails come from ONE explode over the marked rows, so
+      // the condition subtree is planned once (a union of a true-row
+      // arm and a tail arm planned it twice: 7 exchanges, two scans).
       // Stepped `_over_time` aggregates its chunk-bucket partials once
       // per (series, window): no per-(series, bucket) exchange
-      "promql_alert_keep" -> (7, 0, 0))
-    val failures = expected.flatMap { case (name, want) =>
-      val got = shape(name)
-      if (got != want)
-        Some(s"$name: expected (shuffles, bcasts, decodes)=$want, got $got")
-      else None
-    }
+      "promql_alert_keep" -> (4, 0, 0))
+    val failures = mismatches(expected, split = true)
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("one-file reads drop the partial→final aggregate shuffles (default read)") {
+    // the same keys read at the default split size: each table is one
+    // file, so SingleTaskAggRule removes every partial→final exchange
+    // whose segment is unary up to the next kept exchange
+    val expected = Map(
+      // the moments agg runs in the scan's task; the final orderBy's
+      // range exchange stays
+      "ts_anomaly" -> (1, 1, 1),
+      // the fact scan streams through the broadcast dim chain in one
+      // task, so the n_name agg needs no shuffle; orderBy stays
+      "q5_join" -> (1, 5, 0),
+      // the top-k agg runs in the scan's task; TakeOrdered never shuffles
+      "q3_topk" -> (0, 2, 0),
+      // keyless agg: partial and final in one task, no SinglePartition
+      // exchange
+      "q6_filter" -> (0, 0, 0),
+      // the per-query ObjectHashAggregate (q_id) over the one-file query
+      // side loses its exchange; candidate and rerank joins keep theirs
+      "sim_ann_ivfpq" -> (2, 6, 0),
+      // the batch-key distinct under each broadcast (anti + semi) runs
+      // in the batch scan's task; the three chunkify repartitions (user
+      // exchanges), the agg over the union and the orderBy keep theirs
+      "ts_upsert" -> (5, 2, 1),
+      // the gram-index (fp) and df-cap (doc_id, fp) aggs, in both arms
+      // of the self-join, run in the scan's task; island window and
+      // orderBy keep theirs
+      "text_span_extents" -> (2, 3, 0),
+      // the same four extent aggs as text_span_extents; the slice join,
+      // rebuild agg, anti join and orderBy exchanges stay
+      "text_span_scrub" -> (5, 5, 0),
+      // bigram (w1, w2), unigram (w1) and per-doc (id) aggs run in the
+      // scan's task; only the final orderBy shuffles
+      "text_lm_score" -> (1, 2, 0))
+    val failures = mismatches(expected, split = false)
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
