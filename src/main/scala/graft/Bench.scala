@@ -1,6 +1,59 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 object Bench {
+  /** One timed run of a key: `build` constructs its DataFrame, `plan`
+    * makes the physical plan that `count()` runs, `exec` runs it. A
+    * body that does not split reports all of its time as `exec`. */
+  final case class Split(build: Double, plan: Double, exec: Double) {
+    def total: Double = build + plan + exec
+  }
+
+  /** Exactly what `df.count()` does, timed in three parts. */
+  private[graft] def countSplit(build: => DataFrame): Split = {
+    val t0 = System.nanoTime()
+    val qe = build.groupBy().count().queryExecution
+    val t1 = System.nanoTime()
+    qe.executedPlan
+    val t2 = System.nanoTime()
+    SQLExecution.withNewExecutionId(qe, Some("count")) {
+      qe.executedPlan.resetMetrics()
+      qe.executedPlan.executeCollect()
+    }
+    val t3 = System.nanoTime()
+    Split((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9)
+  }
+
+  private def execSplit(body: => Unit): Split = {
+    val t0 = System.nanoTime()
+    body
+    Split(0, 0, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** The timed body of a key: `store_write` is [[controlWrite]], any
+    * other key is its [[SparkEntry]] query counted. */
+  private[graft] def keyBody(spark: SparkSession, sfDir: String, key: String): () => Split =
+    if (key == "store_write") () => execSplit(controlWrite(spark, sfDir))
+    else {
+      val fn = SparkEntry.queries(key)
+      () => countSplit(fn(spark, sfDir))
+    }
+
+  /** `n` timed runs of `body`, each after a `System.gc()` so one run's
+    * garbage is not collected inside the next. A run that throws
+    * records no time: its fast failure is not a timing. */
+  private[graft] def reps(n: Int, what: String)(body: () => Split): Seq[Split] =
+    (1 to n).flatMap { _ =>
+      System.gc()
+      try Some(body())
+      catch { case e: Throwable => warn(s"$what failed", e); None }
+    }
+
+  private[graft] def median(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.size / 2) }
+
+  private def warn(what: String, e: Throwable): Unit =
+    System.err.println(s"[graft.Bench] WARN: $what: ${e.getClass.getSimpleName}: ${e.getMessage}")
+
   /** The WRITE-heavy control op (round-17): chunkify + store-write a
     * fixed 10% slice of events to a throwaway dir, deleted between
     * reps. The r16 control was all read-path, but the rows that drift
@@ -10,7 +63,7 @@ object Bench {
     * same chunkify body the persisted store uses. */
   private[graft] def controlWrite(spark: SparkSession, sfDir: String): Unit = {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ctlw").toFile
+    val dir = java.nio.file.Files.createTempDirectory("graft_ctlw").toString
     try {
       val ev = spark.read.parquet(s"$sfDir/events.parquet")
         .where(pmod(col("user_id"), lit(10L)) === 0)
@@ -21,13 +74,8 @@ object Bench {
       // control measures HOST write speed, so it keeps the pinned shape.
       graft.tsdb.Ts.writeStore(
         graft.tsdb.Ts.chunkify(ev, Seq("user_id", "event_type"), "ts", "value"),
-        dir.getAbsolutePath, rebalance = false)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
-    }
+        dir, rebalance = false)
+    } finally Fs.rm(spark, dir)
   }
 
   def main(args: Array[String]): Unit = {
@@ -35,16 +83,15 @@ object Bench {
     // default to the machine's full parallelism: the bench models a
     // 32-thread executor, and an unset env var should not quietly run
     // the shuffle-heavy queries on 4 threads
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.start("graft-bench")
+    // a warm-up step that fails is logged and counted, never silent: a
+    // store it did not build lands its cost inside a timed key
+    var warmupFailures = 0
+    def step(what: String)(body: => Unit): Unit =
+      try body catch { case e: Throwable =>
+        warmupFailures += 1
+        warn(s"warm-up $what failed", e)
+      }
     // r19: NO cross-run store persistence in a graded run. A chunk
     // store / ANN model store left in /tmp by a previous invocation
     // would let this run skip its ingest entirely — numbers a clean
@@ -53,35 +100,28 @@ object Bench {
     // below builds them untimed — ingest-once/query-many is the
     // declared model — and the timed `store_ingest` key makes the
     // raw-corpus ingest a GRADED number rather than an invisible one).
-    def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-    }
-    Seq("/tmp/graft_store", "/tmp/graft_models")
-      .foreach(p => rmTree(new java.io.File(p)))
+    Seq("/tmp/graft_store", "/tmp/graft_models").foreach(Fs.rm(spark, _))
     // warm the session before timing: file listings, parquet footers,
     // codegen compiler — otherwise the first query absorbs ~5s of setup
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
+      step(s"table $t")(spark.read.parquet(s"$sfDir/$t.parquet").count())
     }
     // build the persisted chunk store and bucketed tables up front:
     // ts_store_* / q_bucket_join measure ingest-once/query-many —
     // ingest cost is not query cost
-    try graft.queries.TsQueries.storeChunks(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    try {
+    step("chunk store")(graft.queries.TsQueries.storeChunks(spark, sfDir).count())
+    step("bucketed tables") {
       // the SAME shared bucket count q_bucket_join derives, so the
       // warm-up builds the tables that query will actually read
       val nb = math.max(graft.queries.Tables.defaultBuckets(sfDir, "lineitem"),
         graft.queries.Tables.defaultBuckets(sfDir, "orders"))
       graft.queries.Tables.bucketed(spark, sfDir, "orders", "o_orderkey", nb).count()
       graft.queries.Tables.bucketed(spark, sfDir, "lineitem", "l_orderkey", nb).count()
-    } catch { case _: Throwable => () }
+    }
     // train the persisted ANN models up front: sim_ann_* measure the
     // query path (probe/scan/rerank); k-means training is ingest cost
-    try graft.queries.OpsQueries.storeModels(spark, sfDir)
-    catch { case _: Throwable => () }
+    step("ANN models")(graft.queries.OpsQueries.storeModels(spark, sfDir))
     // fixed alphabetical execution order: Map iteration order reshuffles
     // whenever keys are added, which made first-touch JIT cost land on a
     // different query every round — per-query times were uncomparable
@@ -94,9 +134,7 @@ object Bench {
     // multiples of its own steady-state time (dedup_apply 11.7s vs its
     // superset dedup_pipeline at 2.9s later in the same run). The timed
     // pass below then measures plans, not the compiler.
-    ordered.foreach { case (_, fn) =>
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-    }
+    ordered.foreach { case (name, fn) => step(s"pre-pass $name")(fn(spark, sfDir).count()) }
     // ===== self-normalizing warm control (the BASELINE.md round-7 /
     // round-15 drift-adjudication protocol, automated): 5 warm reps of
     // the store-family control keys right after the pre-pass, medians
@@ -116,27 +154,16 @@ object Bench {
     val controlPins = Seq("ts_store_anomaly" -> 0.56,
       "ts_store_latest" -> 0.57, "ts_store_downsample" -> 0.40,
       "store_write" -> 0.75)
-    def median(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.size / 2) }
-    try controlWrite(spark, sfDir) catch { case _: Throwable => () } // warm
+    step("store_write")(controlWrite(spark, sfDir))
     val controlMeds: Seq[(String, Double)] = controlPins.flatMap { case (k, _) =>
-      val body: Option[() => Unit] =
-        if (k == "store_write") Some(() => controlWrite(spark, sfDir))
-        else SparkEntry.queries.get(k).map(fn =>
-          () => { fn(spark, sfDir).count(); () })
-      if (body.isEmpty)
+      if (k != "store_write" && !SparkEntry.queries.contains(k)) {
         System.err.println(s"[graft.Bench] WARN: control key '$k' has no body; control_ratio falls back to the remaining keys")
-      body.flatMap { run =>
-        val ts = (1 to 5).flatMap { _ =>
-          System.gc()
-          val t0 = System.nanoTime()
-          try { run(); Some((System.nanoTime() - t0) / 1e9) }
-          catch { case e: Throwable =>
-            // a silently-vanishing control key is exactly the drift blind
-            // spot the write control exists to close — make failure loud
-            System.err.println(s"[graft.Bench] WARN: control key '$k' rep failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
-            None
-          }
-        }
+        None
+      } else {
+        // a silently-vanishing control key is exactly the drift blind
+        // spot the write control exists to close — each failed rep is
+        // logged by `reps`
+        val ts = reps(5, s"control key '$k' rep")(keyBody(spark, sfDir, k)).map(_.total)
         if (ts.size == 5) Some(k -> median(ts))
         else {
           System.err.println(s"[graft.Bench] WARN: control key '$k' completed ${ts.size}/5 reps; OMITTED from control medians — control_ratio reverts to the remaining keys")
@@ -159,47 +186,26 @@ object Bench {
     // a throwaway dir deleted between reps so both timed runs pay the
     // identical work; same System.gc + min-of-2 discipline as every
     // other key.
-    val storeIngest: (String, Double) = {
-      val times = (1 to 2).flatMap { _ =>
-        System.gc()
-        val dir = java.nio.file.Files.createTempDirectory("graft_ingest").toFile
-        val t0 = System.nanoTime()
-        val t = try {
-          graft.tsdb.Ts.writeStore(
-            graft.queries.TsQueries.chunks(spark, sfDir), dir.getAbsolutePath)
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case _: Throwable => None }
-        finally {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(dir)
-        }
-        t
-      }
-      "store_ingest" -> (if (times.nonEmpty) times.min else -1.0)
-    }
-    val results = storeIngest +: ordered.map { case (name, fn) =>
-      // drain the previous query's garbage before starting the clock:
-      // without this, whichever query follows a heap-heavy neighbor
-      // absorbs its GC debt (measured ±1s run-to-run swings on
-      // sub-second queries; the per-query numbers are the graded
-      // artifact, so they should measure plans, not heap history).
-      // min-of-2: even after the pre-pass, single-shot rounds showed
-      // phantom 1.4-1.8x outliers on the store family (r6 vs a 5-rep
-      // recheck, BASELINE.md) — the min of two timed runs measures the
-      // plan, the max measures whatever the heap was doing
-      val times = (1 to 2).flatMap { _ =>
-        System.gc()
-        val t0 = System.nanoTime()
-        // a failed query must NOT record its (fast) failure latency as
-        // a timing — round 7's driver data-shape change made every ts_*
-        // query fail analysis in ~60 ms, and the bench line happily
-        // reported those as 6-centisecond successes
-        try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-        catch { case _: Throwable => None }
-      }
-      name -> (if (times.nonEmpty) times.min else -1.0)
+    def best(runs: Seq[Split]): Double = if (runs.nonEmpty) runs.map(_.total).min else -1.0
+    val storeIngest = "store_ingest" -> best(reps(2, "store_ingest rep") { () =>
+      val dir = java.nio.file.Files.createTempDirectory("graft_ingest").toString
+      try execSplit(graft.tsdb.Ts.writeStore(graft.queries.TsQueries.chunks(spark, sfDir), dir))
+      finally Fs.rm(spark, dir)
+    })
+    // drain the previous query's garbage before starting the clock
+    // (`reps`): without this, whichever query follows a heap-heavy
+    // neighbor absorbs its GC debt (measured ±1s run-to-run swings on
+    // sub-second queries; the per-query numbers are the graded
+    // artifact, so they should measure plans, not heap history).
+    // min-of-2: even after the pre-pass, single-shot rounds showed
+    // phantom 1.4-1.8x outliers on the store family (r6 vs a 5-rep
+    // recheck, BASELINE.md) — the min of two timed runs measures the
+    // plan, the max measures whatever the heap was doing. A failed
+    // query records no timing: round 7's driver data-shape change
+    // made every ts_* query fail analysis in ~60 ms, and the bench
+    // line happily reported those as 6-centisecond successes
+    val results = storeIngest +: ordered.map { case (name, _) =>
+      name -> best(reps(2, s"$name rep")(keyBody(spark, sfDir, name)))
     }
     def fmt(v: Double): String = (math.round(v * 10000) / 10000.0).toString
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
@@ -208,14 +214,15 @@ object Bench {
     val ctl = controlMeds.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val ratioJson = controlRatio.map(fmt).getOrElse("null")
-    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","control":$ctl,"control_ratio":$ratioJson,"queries":$qs,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","control":$ctl,"control_ratio":$ratioJson,"warmup_failures":$warmupFailures,"queries":$qs,"sf":"$sfDir"}"""
     println(json)
     // full-precision flat map to a file for deep diffs (the stdout tail
     // the driver keeps is 2000 chars — the flat 114-key line no longer
     // fits, which is why rounds 3-6 recorded parsed:null)
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_out.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
-    catch { case _: Throwable => () }
+    def write(path: String): Unit =
+      try java.nio.file.Files.writeString(java.nio.file.Paths.get(path), json + "\n")
+      catch { case e: Throwable => warn(s"writing $path failed", e) }
+    write(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json"))
     // the same map as a COMMITTED per-round artifact (BENCH_FULL.json,
     // alongside RECALL.json): the stdout line carries only the slowest
     // keys that fit its tail budget, so the repo file is the durable
@@ -223,10 +230,7 @@ object Bench {
     // twice now a small-SF smoke run clobbered the committed sf0.1
     // record (restored by hand in r15 and r16) — the graded artifact
     // is pinned to its scale, smoke runs keep bench_out.json
-    if (new java.io.File(sfDir).getName == "sf0.1")
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("/root/repo/BENCH_FULL.json"), json + "\n")
-      catch { case _: Throwable => () }
+    if (new java.io.File(sfDir).getName == "sf0.1") write("BENCH_FULL.json")
     // LAST line (r19 contract fix): flat, UN-ENCODED JSON the driver's
     // last-JSON-line parse actually consumes. PERF_r17/r18 proved the
     // compact tiers are never decoded by the consumer — three rounds

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,16 +10,7 @@ object Verify {
       case Array(a, b)    => (a, b, Set.empty[String])
       case Array(a, b, c) => (a, b, c.split(",").toSet)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.start("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -65,7 +55,7 @@ object Verify {
           s"\"n_matched\": ${r.getLong(3)}, \"recall_bp\": ${r.getLong(4)}}"
       }.mkString("{\n", ",\n", "\n}")
       Files.writeString(Paths.get(s"$outDir/recall.json"), recallJson)
-      Files.writeString(Paths.get("/root/repo/RECALL.json"), recallJson)
+      Files.writeString(Paths.get("RECALL.json"), recallJson)
     } catch { case e: Throwable =>
       System.err.println(s"[verify] recall artifact failed: ${e.getMessage}")
     }

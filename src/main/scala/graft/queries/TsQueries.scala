@@ -522,10 +522,7 @@ object TsQueries {
     val path = storePath(dir) + "_nhcbstr"
     if (!committed(s, path)) {
       val work = path + "_work"
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(work))
+      graft.Fs.rm(s, work)
       val srcDir = s"$work/src"
       new java.io.File(srcDir).mkdirs()
       val ev = Tables(s, dir, "events")
@@ -589,7 +586,7 @@ object TsQueries {
       // windows pack ~512 points per chunk: same decoded points, same
       // query results, ~two orders of magnitude fewer store rows.
       Ts.writeStore(Ts.chunkifyAdaptive(samp, nhcbLabelCols, "ts", "value"), path)
-      rm(new java.io.File(work))
+      graft.Fs.rm(s, work)
     }
     readAdaptiveStore(s, path, fromSec, toSec)
   }
@@ -755,27 +752,35 @@ object TsQueries {
     s"/tmp/graft_store/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_${java.lang.Long.toHexString(fp)}_s4"
   }
 
+  /** A store derived from `dir`'s chunk store, built once per dir: the
+    * store is copied to `<path>.tmp`, `mutate` runs on the copy's path,
+    * and the copy is renamed into place, all through the store path's
+    * own FileSystem. */
+  private def derivedStore(s: SparkSession, dir: String, suffix: String)(
+      mutate: String => Unit): String = synchronized {
+    graft.functions.registerAll(s)
+    storeChunks(s, dir) // ensure the source store exists
+    val path = storePath(dir) + suffix
+    if (!committed(s, path)) {
+      val conf = s.sparkContext.hadoopConfiguration
+      val src = new org.apache.hadoop.fs.Path(storePath(dir))
+      val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
+      val fs = tmp.getFileSystem(conf)
+      fs.delete(tmp, true)
+      org.apache.hadoop.fs.FileUtil.copy(src.getFileSystem(conf), src, fs, tmp, false, conf)
+      mutate(tmp.toString)
+      graft.Fs.replace(s, tmp.toString, path)
+    }
+    path
+  }
+
   /** A byte-copy of the chunk store with [RangeFrom, RangeTo] deleted
     * in place ([[Ts.deleteFromStore]]) — built once per dir like
     * [[storeChunks]]. The copy is a filesystem copy, not a re-encode:
     * the point is to exercise delete-then-serve on a real persisted
     * store (horizon marker included) without paying a second ingest. */
-  def deletedStorePath(s: SparkSession, dir: String): String = synchronized {
-    graft.functions.registerAll(s)
-    storeChunks(s, dir) // ensure the source store exists
-    val path = storePath(dir) + "_del"
-    if (!committed(s, path)) {
-      val conf = s.sparkContext.hadoopConfiguration
-      val fs = org.apache.hadoop.fs.FileSystem.getLocal(conf)
-      val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      org.apache.hadoop.fs.FileUtil.copy(
-        fs, new org.apache.hadoop.fs.Path(storePath(dir)), fs, tmp, false, conf)
-      Ts.deleteFromStore(s, tmp.toString, RangeFrom, RangeTo)
-      fs.rename(tmp, new org.apache.hadoop.fs.Path(path))
-    }
-    path
-  }
+  def deletedStorePath(s: SparkSession, dir: String): String =
+    derivedStore(s, dir, "_del")(Ts.deleteFromStore(s, _, RangeFrom, RangeTo))
 
   /** The late batch both upsert queries merge: the fixed range's
     * points shifted +30 min — most land inside windows the store
@@ -794,22 +799,9 @@ object TsQueries {
     * place ([[Ts.upsertIntoStore]]) — built once per dir like
     * [[deletedStorePath]]: only the touched `window_date` partitions
     * are read and rewritten on a real persisted store. */
-  def upsertedStorePath(s: SparkSession, dir: String): String = synchronized {
-    graft.functions.registerAll(s)
-    storeChunks(s, dir) // ensure the source store exists
-    val path = storePath(dir) + "_ups"
-    if (!committed(s, path)) {
-      val conf = s.sparkContext.hadoopConfiguration
-      val fs = org.apache.hadoop.fs.FileSystem.getLocal(conf)
-      val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      org.apache.hadoop.fs.FileUtil.copy(
-        fs, new org.apache.hadoop.fs.Path(storePath(dir)), fs, tmp, false, conf)
-      Ts.upsertIntoStore(s, tmp.toString, lateBatch(s, dir), series, "ts", "v")
-      fs.rename(tmp, new org.apache.hadoop.fs.Path(path))
-    }
-    path
-  }
+  def upsertedStorePath(s: SparkSession, dir: String): String =
+    derivedStore(s, dir, "_ups")(
+      Ts.upsertIntoStore(s, _, lateBatch(s, dir), series, "ts", "v"))
 
   /** A COMPACTED copy of a deliberately fragmented ingest: the events
     * split into two arbitrary halves and appended separately (two
@@ -829,7 +821,7 @@ object TsQueries {
         frag, mode = "append")
       val tmp = path + ".tmp"
       Ts.compactStore(s, frag, tmp)
-      new java.io.File(tmp).renameTo(new java.io.File(path))
+      graft.Fs.replace(s, tmp, path)
     }
     path
   }
@@ -840,22 +832,9 @@ object TsQueries {
     * RangeTo with a 2-day horizon puts the cutoff date exactly at
     * RangeFrom's midnight; 2-h windows never straddle midnight, so the
     * surviving store holds precisely the events at ts >= RangeFrom. */
-  def expiredStorePath(s: SparkSession, dir: String): String = synchronized {
-    graft.functions.registerAll(s)
-    storeChunks(s, dir) // ensure the source store exists
-    val path = storePath(dir) + "_exp"
-    if (!committed(s, path)) {
-      val conf = s.sparkContext.hadoopConfiguration
-      val fs = org.apache.hadoop.fs.FileSystem.getLocal(conf)
-      val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      org.apache.hadoop.fs.FileUtil.copy(
-        fs, new org.apache.hadoop.fs.Path(storePath(dir)), fs, tmp, false, conf)
-      Ts.expireStore(s, tmp.toString, olderThanDays = 2, asOfSec = RangeTo)
-      fs.rename(tmp, new org.apache.hadoop.fs.Path(path))
-    }
-    path
-  }
+  def expiredStorePath(s: SparkSession, dir: String): String =
+    derivedStore(s, dir, "_exp")(
+      Ts.expireStore(s, _, olderThanDays = 2, asOfSec = RangeTo))
 
   private def aggExact(points: DataFrame): DataFrame =
     points.groupBy("user_id")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.tsdb.Ts
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -16,13 +15,7 @@ import org.apache.spark.sql.functions._
 object CsvToPacked {
   def main(args: Array[String]): Unit = {
     val path = args.headOption.getOrElse("/root/reference/examples/test_data.csv")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.registerAll(spark)
+    val spark = graft.LocalSession.start("graft-csv-to-packed")
 
     val raw = spark.read
       .schema("timestamp LONG, value DOUBLE")

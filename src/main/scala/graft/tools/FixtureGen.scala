@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.tsdb.Ts
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -20,15 +19,8 @@ import org.apache.spark.sql.functions._
 object FixtureGen {
   def main(args: Array[String]): Unit = {
     val out = if (args.length > 0) args(0)
-      else "/root/repo/src/test/resources/fixtures/store_v1"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.registerAll(spark)
+      else "src/test/resources/fixtures/store_v1"
+    val spark = graft.LocalSession.start("graft-fixture-gen")
     val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     Ts.writeStore(Ts.chunkify(ev, Seq("user_id", "event_type"), "ts", "value")
       .coalesce(1), s"$out/store")

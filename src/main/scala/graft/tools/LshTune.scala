@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.ops.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -19,15 +18,8 @@ import org.apache.spark.sql.functions._
 object LshTune {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val out = if (args.length > 1) args(1) else "/root/repo/LSH_TUNE.json"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val out = if (args.length > 1) args(1) else "LSH_TUNE.json"
+    val spark = graft.LocalSession.start("graft-lsh-tune")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val qs = emb.filter(col("vec_id") < 10)
     val idx = graft.queries.OpsQueries.storeModels(spark, dir)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.ops.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -55,17 +54,9 @@ object RecallScale {
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/tmp/graft_scale"
-    val out = if (args.length > 1) args(1) else "/root/repo/RECALL_SCALE.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.driver.maxResultSize", "4g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val out = if (args.length > 1) args(1) else "RECALL_SCALE.json"
+    val spark = graft.LocalSession.start("graft-recall-scale",
+      conf = Map("spark.driver.maxResultSize" -> "4g"))
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val nVec = emb.count()
     val idx = graft.queries.OpsQueries.storeModels(spark, dir)

@@ -30,21 +30,11 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val scaleDir = if (args.length > 0) args(0) else "/tmp/graft_scale"
     val sf01Dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val outPath = if (args.length > 2) args(2) else "/root/repo/BENCH_SCALE.json"
+    val outPath = if (args.length > 2) args(2) else "BENCH_SCALE.json"
     val work = "/tmp/graft_scale_work"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-bench")
-      .config("spark.sql.shuffle.partitions", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.driver.maxResultSize", "4g")
-      .config("spark.local.dir", "/tmp/graft_scale_tmp")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.registerAll(spark)
+    val spark = graft.LocalSession.start("graft-scale-bench", conf = Map(
+      "spark.sql.shuffle.partitions" -> "256", "spark.driver.maxResultSize" -> "4g",
+      "spark.local.dir" -> "/tmp/graft_scale_tmp"))
 
     // stage-level spill accounting: deltas bracket each step
     @volatile var spill = 0L
@@ -391,14 +381,8 @@ object ScaleBench {
     def nhcbFamily(tag: String, dir: String): Unit = {
       val nEv = spark.read.parquet(s"$dir/events.parquet").count()
       val to = 1705017600L
-      def dropStore(suffix: String): Unit = {
-        val p = new java.io.File(
-          graft.queries.TsQueries.storePathFor(dir) + suffix)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        if (p.exists()) rm(p)
-      }
+      def dropStore(suffix: String): Unit =
+        graft.Fs.rm(spark, graft.queries.TsQueries.storePathFor(dir) + suffix)
       dropStore("_nhcb")
       timed(s"${tag}_nhcb_ingest", nEv, "custom-bound buckets (schema -53) -> _nhcb chunk store") {
         graft.queries.TsQueries.nhcbStoreChunks(spark, dir).count()
@@ -457,14 +441,8 @@ object ScaleBench {
     def migFamily(tag: String, dir: String): Unit = {
       val nEv = spark.read.parquet(s"$dir/events.parquet").count()
       val to = 1705017600L
-      def dropStore(suffix: String): Unit = {
-        val p = new java.io.File(
-          graft.queries.TsQueries.storePathFor(dir) + suffix)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        if (p.exists()) rm(p)
-      }
+      def dropStore(suffix: String): Unit =
+        graft.Fs.rm(spark, graft.queries.TsQueries.storePathFor(dir) + suffix)
       dropStore("_histmig")
       timed(s"${tag}_histmig_ingest", nEv, "classic(even hosts) U NHCB(odd hosts) -> _histmig chunk store") {
         graft.queries.TsQueries.migrationHistStoreChunks(spark, dir).count()

@@ -204,16 +204,8 @@ object ScaleGen {
     val nDocs = if (args.length > 2) args(2).toLong else 2000000L
     val nVecs = if (args.length > 3) args(3).toLong else 2000000L
     val nLine = if (args.length > 4) args(4).toLong else 100000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-gen")
-      .config("spark.sql.shuffle.partitions", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.maxResultSize", "4g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession.start("graft-scale-gen", conf = Map(
+      "spark.sql.shuffle.partitions" -> "256", "spark.driver.maxResultSize" -> "4g"))
     def t(what: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime(); f
       println(f"[scalegen] $what: ${(System.nanoTime() - t0) / 1e9}%.1f s")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.streaming.StreamIngest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -12,13 +11,7 @@ import org.apache.spark.sql.functions._
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/graft_stream_demo")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.registerAll(spark)
+    val spark = graft.LocalSession.start("graft-stream-demo")
 
     // 200 events/sec, 4 series, event time compressed so windows close fast
     val events = spark.readStream.format("rate-micro-batch")

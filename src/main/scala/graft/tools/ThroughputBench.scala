@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.tsdb.Ts
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -15,15 +14,7 @@ object ThroughputBench {
   def main(args: Array[String]): Unit = {
     val nSeries = args.headOption.map(_.toInt).getOrElse(64)
     val perSeries = args.drop(1).headOption.map(_.toInt).getOrElse(86400) // 1 day @ 1Hz
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.registerAll(spark)
+    val spark = graft.LocalSession.start("graft-throughput-bench")
 
     val base = 1700000000L / 7200 * 7200
     val n = nSeries.toLong * perSeries

@@ -30,13 +30,8 @@ class ExplainAllSpec extends AnyFunSuite {
   private def shape(name: String, split: Boolean = true): (Int, Int, Int) = {
     if (split) spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
     try {
-      val plan = SparkEntry.queries(name)(spark, dir).queryExecution
-        .executedPlan.toString
-      val shuffles = "(?m)^[^\\n]*\\bExchange (hash|range|Single)".r
-        .findAllIn(plan).size
-      val bcasts = "BroadcastExchange".r.findAllIn(plan).size
-      val decodes = "gorilla_decode".r.findAllIn(plan).size
-      (shuffles, bcasts, decodes)
+      graft.tools.Probe.shape(
+        SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString)
     } finally if (split) spark.conf.unset("spark.sql.files.maxPartitionBytes")
   }
 
