@@ -1098,7 +1098,6 @@ object PromqlQueries {
     * (`rec` = derived chunk store, `alerts` = state log). */
   private def streamRulesStore(s: SparkSession, dir: String): String =
     synchronized {
-      graft.functions.registerAll(s)
       val base = TsQueries.storePathFor(dir) + "_srec3" // r16: + keep-alert
       val done = new java.io.File(base, "_DONE")
       if (!done.exists()) {

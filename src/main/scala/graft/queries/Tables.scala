@@ -4,10 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Parquet table access for the driver-generated TPC-H-ish test data. */
 object Tables {
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    graft.functions.registerAll(spark)
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
-  }
 
   /** Bucket count sized to the table: one bucket per ~64 MB of input,
     * clamped to [8, 1024]. Join partners must agree on the count, so
@@ -39,7 +37,6 @@ object Tables {
    */
   def bucketed(spark: SparkSession, dir: String, name: String,
                key: String, buckets: Int = 0): DataFrame = synchronized {
-    graft.functions.registerAll(spark)
     val nb = if (buckets > 0) buckets else defaultBuckets(dir, name)
     val dirTag = dir.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
     val table = s"graft_${name}_${dirTag}_${nb}b"

@@ -31,10 +31,6 @@ object TsQueries {
   def storeChunks(s: SparkSession, dir: String,
                   fromSec: Long = Long.MinValue,
                   toSec: Long = Long.MaxValue): DataFrame = synchronized {
-    // the cache-hit path skips chunkify (and with it Tables' implicit
-    // function registration), but decoding the read-back store still
-    // needs the gorilla functions in this session's registry
-    graft.functions.registerAll(s)
     val path = storePath(dir)
     if (!committed(s, path))
       Ts.writeStore(chunks(s, dir), path)
@@ -67,7 +63,6 @@ object TsQueries {
   def labeledStoreChunks(s: SparkSession, dir: String,
                          fromSec: Long = Long.MinValue,
                          toSec: Long = Long.MaxValue): DataFrame = synchronized {
-    graft.functions.registerAll(s)
     val path = storePath(dir) + "_lbl"
     if (!committed(s, path))
       Ts.writeStore(Ts.chunkify(labeledEvents(s, dir), labelCols, "ts", "value"), path)
@@ -102,7 +97,6 @@ object TsQueries {
     * selectors prune on the rule name at the chunk-metadata scan and
     * `_over_time` functions answer from header stats with zero decode. */
   def recordedStoreChunks(s: SparkSession, dir: String): DataFrame = synchronized {
-    graft.functions.registerAll(s)
     val path = storePath(dir) + "_rec"
     if (!committed(s, path)) {
       val rule = graft.tsdb.Rules.Recording("region:click:sum6h",
@@ -141,7 +135,6 @@ object TsQueries {
   def histStoreChunks(s: SparkSession, dir: String,
                       fromSec: Long = Long.MinValue,
                       toSec: Long = Long.MaxValue): DataFrame = synchronized {
-    graft.functions.registerAll(s)
     val path = storePath(dir) + "_hist"
     if (!committed(s, path)) {
       val ev0 = Tables(s, dir, "events")
@@ -323,7 +316,6 @@ object TsQueries {
   def nativeHistStoreChunks(s: SparkSession, dir: String,
                             fromSec: Long = Long.MinValue,
                             toSec: Long = Long.MaxValue): DataFrame = synchronized {
-    graft.functions.registerAll(s)
     readAdaptiveStore(s, buildNativeHistStore(s, dir, "_nhist", nativeHistLabelCols,
       None, Seq(graft.tsdb.NativeHist.Schema), 0L), fromSec, toSec)
   }
@@ -344,7 +336,6 @@ object TsQueries {
   def resetNativeHistStoreChunks(s: SparkSession, dir: String,
                                  fromSec: Long = Long.MinValue,
                                  toSec: Long = Long.MaxValue): DataFrame = synchronized {
-    graft.functions.registerAll(s)
     readAdaptiveStore(s, buildNativeHistStore(s, dir, "_nhistr", nativeHistLabelCols,
       None, Seq(graft.tsdb.NativeHist.Schema), 0L,
       resetAtSec = Some(NativeResetAt)), fromSec, toSec)
@@ -370,7 +361,6 @@ object TsQueries {
   def mixedNativeHistStoreChunks(s: SparkSession, dir: String,
                                  fromSec: Long = Long.MinValue,
                                  toSec: Long = Long.MaxValue): DataFrame = synchronized {
-    graft.functions.registerAll(s)
     readAdaptiveStore(s, buildNativeHistStore(s, dir, "_nhistm",
       mixedNativeHistLabelCols,
       Some(when(pmod(col("user_id"), lit(2L)) === 0, lit("3"))
@@ -391,7 +381,6 @@ object TsQueries {
   def wideNativeHistStoreChunks(s: SparkSession, dir: String,
                                 fromSec: Long = Long.MinValue,
                                 toSec: Long = Long.MaxValue): DataFrame = synchronized {
-    graft.functions.registerAll(s)
     val m4 = pmod(col("user_id"), lit(4L))
     readAdaptiveStore(s, buildNativeHistStore(s, dir, "_nhistw",
       mixedNativeHistLabelCols,
@@ -413,7 +402,6 @@ object TsQueries {
   def signedNativeHistStoreChunks(s: SparkSession, dir: String,
                                   fromSec: Long = Long.MinValue,
                                   toSec: Long = Long.MaxValue): DataFrame = synchronized {
-    graft.functions.registerAll(s)
     readAdaptiveStore(s, buildNativeHistStore(s, dir, "_nhistg", nativeHistLabelCols,
       None, Seq(graft.tsdb.NativeHist.Schema), 2500L), fromSec, toSec)
   }
@@ -436,7 +424,6 @@ object TsQueries {
   def nhcbStoreChunks(s: SparkSession, dir: String,
                       fromSec: Long = Long.MinValue,
                       toSec: Long = Long.MaxValue): DataFrame = synchronized {
-    graft.functions.registerAll(s)
     val path = storePath(dir) + "_nhcb"
     if (!committed(s, path))
       buildNhcbStoreFrom(s, Tables(s, dir, "events"), path)
@@ -518,7 +505,6 @@ object TsQueries {
   def streamedNhcbStoreChunks(s: SparkSession, dir: String,
                               fromSec: Long = Long.MinValue,
                               toSec: Long = Long.MaxValue): DataFrame = synchronized {
-    graft.functions.registerAll(s)
     val path = storePath(dir) + "_nhcbstr"
     if (!committed(s, path)) {
       val work = path + "_work"
@@ -613,7 +599,6 @@ object TsQueries {
   def migrationHistStoreChunks(s: SparkSession, dir: String,
                                fromSec: Long = Long.MinValue,
                                toSec: Long = Long.MaxValue): DataFrame = synchronized {
-    graft.functions.registerAll(s)
     val path = storePath(dir) + "_histmig"
     if (!committed(s, path)) {
       val ev0 = Tables(s, dir, "events")
@@ -692,7 +677,6 @@ object TsQueries {
     * persisted chunk store ONCE (raw → chunks → rollup, the standing-
     * aggregate lineage), then every serve is a pruned partial scan. */
   def rollupStore(s: SparkSession, dir: String): DataFrame = synchronized {
-    graft.functions.registerAll(s)
     val path = storePath(dir) + "_roll900"
     if (!committed(s, path))
       Ts.writeRollup(storeChunks(s, dir), series, path, bucketSec = 900)
@@ -708,7 +692,6 @@ object TsQueries {
     * computing from raw — the continuous aggregate is lossless under
     * incremental maintenance. */
   def mergeRollupStore(s: SparkSession, dir: String): DataFrame = synchronized {
-    graft.functions.registerAll(s)
     val path = storePath(dir) + "_roll900m"
     if (!committed(s, path)) {
       val ch = storeChunks(s, dir)
@@ -748,8 +731,9 @@ object TsQueries {
     // _s4: store-format generation tag — bumped in r18 when writeStore
     // gained date-clustered file sizing, so stores cached by older code
     // (992 near-empty files on the sf0.1 native store) rebuild instead
-    // of silently serving the old layout
-    s"/tmp/graft_store/${dir.replaceAll("[^A-Za-z0-9.]", "_")}_${java.lang.Long.toHexString(fp)}_s4"
+    // of silently serving the old layout. The leaf starts with a letter:
+    // Spark ignores `_`/`.`-prefixed paths as hidden
+    s"/tmp/graft_store/store${dir.replaceAll("[^A-Za-z0-9.]", "_")}_${java.lang.Long.toHexString(fp)}_s4"
   }
 
   /** A store derived from `dir`'s chunk store, built once per dir: the
@@ -758,7 +742,6 @@ object TsQueries {
     * own FileSystem. */
   private def derivedStore(s: SparkSession, dir: String, suffix: String)(
       mutate: String => Unit): String = synchronized {
-    graft.functions.registerAll(s)
     storeChunks(s, dir) // ensure the source store exists
     val path = storePath(dir) + suffix
     if (!committed(s, path)) {
@@ -810,7 +793,6 @@ object TsQueries {
     * [[Ts.compactStore]] into one-chunk-per-window form. Built once
     * per dir like the other derived stores. */
   def compactedStorePath(s: SparkSession, dir: String): String = synchronized {
-    graft.functions.registerAll(s)
     val path = storePath(dir) + "_cmp"
     if (!committed(s, path)) {
       val frag = storePath(dir) + "_frag"

@@ -109,9 +109,9 @@ object StreamIngest {
    * collect_list, no per-group streaming state), so a 1 kHz series
    * never accumulates rows in state — at the cost of several PARTIAL
    * chunks per (series, window) when a window spans micro-batches.
-   * Readers are agnostic: the store contract already allows multiple
-   * chunks per window (salted ingest produces the same shape), and
-   * every chunk still carries exact stats for pruning. Use
+   * Readers are agnostic: the store contract allows multiple chunks
+   * per window (an appended `writeStore` batch produces the same
+   * shape), and every chunk still carries exact stats for pruning. Use
    * [[chunkStream]] when you want exactly one sealed chunk per window
    * and your rate fits watermark state; use this when ingest rate
    * dominates.

@@ -62,40 +62,31 @@ object Ts {
    * dense-series shapes.
    */
   def chunkify(events: DataFrame, seriesCols: Seq[String], tsCol: String, valCol: String,
-               windowSec: Long = WindowSec, leadTrail: Boolean = false,
-               saltBuckets: Int = 1): DataFrame = {
-    val base0 = events
+               windowSec: Long = WindowSec, leadTrail: Boolean = false): DataFrame = {
+    val base = events
       .select(seriesCols.map(col) :+ epochSec(events, tsCol).as("__sec") :+
         col(valCol).cast("double").as("__v"): _*)
-    if (saltBuckets <= 1)
-      // fast path: the window is a pure function of __sec, so it rides
-      // the shuffle as a repartition EXPRESSION and is re-derived
-      // in-partition — 8 fewer bytes per shuffled row on the
-      // encode-dominant path (the shuffle is the encode bottleneck)
-      return encodeSortedDerived(base0, seriesCols, windowSec, leadTrail)
-    // skew escape hatch: a pathologically hot (series, window) splits
-    // into saltBuckets sub-chunks; readers are agnostic (a window may
-    // own several chunks), roundtrip set semantics unchanged
-    val base = base0
-      .withColumn("window_start", (floor(col("__sec") / windowSec) * windowSec).cast("long"))
-      .withColumn("__salt",
-        pmod(xxhash64(col("__sec"), col("__v")), lit(saltBuckets.toLong)))
-    encodeSorted(base, "__salt" +: seriesCols :+ "window_start", leadTrail)
+    // the window is a pure function of __sec, so it rides the shuffle as
+    // a repartition EXPRESSION and no window column crosses it: 8 fewer
+    // bytes per shuffled row on the encode-dominant path
+    encodeSorted(base, seriesCols,
+      (floor(col("__sec") / windowSec) * windowSec).cast("long"), leadTrail)
   }
 
-  /** Sort-based encode that derives the window from `__sec` inside the
-    * partition instead of shuffling a precomputed window_start column:
-    * rows hash-partition on (series, floor(__sec / windowSec)) via
-    * repartition expressions, sort by (series, __sec, __v), and the
-    * merge loop breaks groups on a series-key or window change. */
-  private def encodeSortedDerived(base: DataFrame, seriesCols: Seq[String],
-                                  windowSec: Long, leadTrail: Boolean): DataFrame = {
+  /** Sort-based encode of a (seriesCols*, __sec, __v) frame into one
+    * chunk per (series, `window`): hash-repartition on the series and
+    * `window`, evaluate `window` as `window_start` after the exchange,
+    * external-sort within partitions by (series, window_start, __sec,
+    * __v), and stream each consecutive run straight into the gorilla
+    * encoder. */
+  private def encodeSorted(base: DataFrame, seriesCols: Seq[String], window: Column,
+                           leadTrail: Boolean): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types._
     val sorted = base
-      .repartition(seriesCols.map(col) :+
-        floor(col("__sec") / windowSec).cast("long").as("__w"): _*)
-      .sortWithinPartitions((seriesCols :+ "__sec" :+ "__v").map(col): _*)
+      .repartition(seriesCols.map(col) :+ window: _*)
+      .select(seriesCols.map(col) :+ window.as("window_start") :+ col("__sec") :+ col("__v"): _*)
+      .sortWithinPartitions((seriesCols :+ "window_start" :+ "__sec" :+ "__v").map(col): _*)
     val outSchema = StructType(
       seriesCols.map(k => sorted.schema(k)).toArray ++ Array(
         StructField("window_start", LongType, nullable = false),
@@ -107,6 +98,7 @@ object Ts {
         StructField("sum_cents", LongType, nullable = false),
         StructField("sumsq_cents", LongType, nullable = false),
         StructField("chunk", BinaryType, nullable = false)))
+    val winIdx = sorted.schema.fieldIndex("window_start")
     val secIdx = sorted.schema.fieldIndex("__sec")
     val vIdx = sorted.schema.fieldIndex("__v")
     val keyIdx = seriesCols.map(sorted.schema.fieldIndex).toArray
@@ -117,7 +109,7 @@ object Ts {
         def next(): Row = {
           val head = it.head
           val key = keyIdx.map(head.get)
-          val window = Math.floorDiv(head.getLong(secIdx), windowSec)
+          val window = head.getLong(winIdx)
           var ts = new Array[Long](64)
           var vs = new Array[Double](64)
           var n = 0
@@ -125,76 +117,10 @@ object Ts {
           var maxV = Double.NegativeInfinity
           var sumC = 0L
           var sumQ = 0L
-          while (it.hasNext &&
-              Math.floorDiv(it.head.getLong(secIdx), windowSec) == window &&
+          while (it.hasNext && it.head.getLong(winIdx) == window &&
               java.util.Arrays.equals(
                 keyIdx.map(it.head.get).asInstanceOf[Array[AnyRef]],
                 key.asInstanceOf[Array[AnyRef]])) {
-            val r = it.next()
-            if (n == ts.length) {
-              ts = java.util.Arrays.copyOf(ts, n * 2)
-              vs = java.util.Arrays.copyOf(vs, n * 2)
-            }
-            val v = r.getDouble(vIdx)
-            ts(n) = r.getLong(secIdx)
-            vs(n) = v
-            if (v < minV) minV = v
-            if (v > maxV) maxV = v
-            val c = graft.core.GorillaCodec.halfUpFixed(v * FixedScale)
-            sumC += c
-            sumQ += c * c
-            n += 1
-          }
-          val bytes = graft.core.GorillaCodec.encode(
-            java.util.Arrays.copyOf(ts, n), java.util.Arrays.copyOf(vs, n),
-            graft.core.GorillaCodec.alignWindow(ts(0), WindowSec), leadTrail)
-          Row.fromSeq(key.toSeq ++
-            Seq(window * windowSec, n.toLong, ts(0), ts(n - 1), minV, maxV, sumC, sumQ, bytes))
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
-
-  /** Sort-based encode of a prepared (keys*, __sec, __v) frame: hash-
-    * repartition on the keys, external-sort within partitions, stream
-    * consecutive runs straight into the gorilla encoder. */
-  private def encodeSorted(base: DataFrame, keyCols: Seq[String],
-                           leadTrail: Boolean): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    val sorted = base
-      .repartition(keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols :+ "__sec" :+ "__v").map(col): _*)
-    val outSchema = StructType(
-      keyCols.map(k => sorted.schema(k)).toArray ++ Array(
-        StructField("n", LongType, nullable = false),
-        StructField("min_ts", LongType, nullable = false),
-        StructField("max_ts", LongType, nullable = false),
-        StructField("min_v", DoubleType, nullable = false),
-        StructField("max_v", DoubleType, nullable = false),
-        StructField("sum_cents", LongType, nullable = false),
-        StructField("sumsq_cents", LongType, nullable = false),
-        StructField("chunk", BinaryType, nullable = false)))
-    val secIdx = sorted.schema.fieldIndex("__sec")
-    val vIdx = sorted.schema.fieldIndex("__v")
-    val keyIdx = keyCols.map(sorted.schema.fieldIndex).toArray
-    sorted.mapPartitions { rows =>
-      new Iterator[Row] {
-        private val it = rows.buffered
-        def hasNext: Boolean = it.hasNext
-        def next(): Row = {
-          val head = it.head
-          val key = keyIdx.map(head.get)
-          var ts = new Array[Long](64)
-          var vs = new Array[Double](64)
-          var n = 0
-          var minV = Double.PositiveInfinity
-          var maxV = Double.NegativeInfinity
-          var sumC = 0L
-          var sumQ = 0L
-          while (it.hasNext && java.util.Arrays.equals(
-              keyIdx.map(it.head.get).asInstanceOf[Array[AnyRef]],
-              key.asInstanceOf[Array[AnyRef]])) {
             val r = it.next()
             if (n == ts.length) {
               ts = java.util.Arrays.copyOf(ts, n * 2)
@@ -216,7 +142,8 @@ object Ts {
           val bytes = graft.core.GorillaCodec.encode(
             java.util.Arrays.copyOf(ts, n), java.util.Arrays.copyOf(vs, n),
             graft.core.GorillaCodec.alignWindow(ts(0), WindowSec), leadTrail)
-          Row.fromSeq(key.toSeq ++ Seq(n.toLong, ts(0), ts(n - 1), minV, maxV, sumC, sumQ, bytes))
+          Row.fromSeq(key.toSeq ++
+            Seq(window, n.toLong, ts(0), ts(n - 1), minV, maxV, sumC, sumQ, bytes))
         }
       }
     }(Encoders.row(outSchema))
@@ -245,11 +172,8 @@ object Ts {
         least(lit(maxWindowSec), greatest(lit(windowSec),
           (ceil((col("__t1") - col("__t0") + 1) * targetPoints /
             (col("__n") * windowSec.toDouble)) * windowSec).cast("long"))).as("__wsec"): _*)
-    val withWindow = base.join(broadcast(stats), seriesCols)
-      .withColumn("window_start",
-        (floor(col("__sec") / col("__wsec")) * col("__wsec")).cast("long"))
-      .drop("__wsec")
-    encodeSorted(withWindow, seriesCols :+ "window_start", leadTrail = false)
+    encodeSorted(base.join(broadcast(stats), seriesCols), seriesCols,
+      (floor(col("__sec") / col("__wsec")) * col("__wsec")).cast("long"), leadTrail = false)
   }
 
   /** Decode chunks back to one row per point: `seriesCols*, ts, v`. */
@@ -367,7 +291,7 @@ object Ts {
    * folds each chunk into ≤ windowSec/bucketSec partial rows (a 2-h
    * 1 Hz chunk becomes ≤ 8 rows for 15-min buckets instead of 7200
    * exploded points), and the partials merge exactly across
-   * chunks/salt shards/shuffles (counts, nan-safe min/max, HALF_UP
+   * chunks/shuffles (counts, nan-safe min/max, HALF_UP
    * fixed-point sums — all order-independent). The TSDB's highest
    * frequency query shape with a ~bucket-width× cut in rows through
    * the aggregate, and never a point struct materialized.
@@ -394,8 +318,8 @@ object Ts {
    * per-bucket partials carry the exact integer second moment too, so
    * each bucket reports variance — Prometheus's `stddev_over_time`
    * shape — as (nQ − S²)/n² with an exact long numerator and one
-   * float division. Partials re-aggregate exactly across chunks/salt
-   * shards (all longs), so bucket variance is deterministic under any
+   * float division. Partials re-aggregate exactly across chunks (all
+   * longs), so bucket variance is deterministic under any
    * partitioning.
    */
   def downsampleStatsCompressed(chunks: DataFrame, seriesCols: Seq[String],
@@ -562,8 +486,8 @@ object Ts {
 
   /** Latest point per series: stat-prune to each series' max-ts
     * chunk(s), decode only those. Keyed on the point-level `max_ts`
-    * stat (tighter than window_start, and fragmentation-safe: salted /
-    * per-batch ingest legally stores several chunks per window, and an
+    * stat (tighter than window_start, and fragmentation-safe: per-batch
+    * ingest legally stores several chunks per window, and an
     * exact max_ts tie keeps ALL tied chunks so the final (ts, v)
     * arg-max still sees every candidate point). The join's build side
     * is one row per series — AQE broadcasts it. */
@@ -713,7 +637,8 @@ object Ts {
       .select(keyCols.map(col) :+ explode(gorilla_decode(col("chunk"))).as("__p"): _*)
       .select(keyCols.map(col) :+ col("__p.ts").as("__sec") :+ col("__p.v").as("__v"): _*)
       .filter(col("__sec") < fromSec || col("__sec") > toSec)
-    untouched.unionByName(encodeSorted(survivors, keyCols, leadTrail = false))
+    untouched.unionByName(
+      encodeSorted(survivors, seriesCols, col("window_start"), leadTrail = false))
   }
 
   /**
@@ -922,7 +847,9 @@ object Ts {
   /** Merge the touched partitions' per-series max(max_ts) into the
     * store's persisted horizon marker. Tmp-write + swap because the
     * merge READS the current marker; the frame is one row per touched
-    * series (distributed write — never collected). */
+    * series (distributed write — never collected). The swap raises
+    * when the filesystem refuses the rename, so the delete stops
+    * before any chunk is touched. */
   private def persistHorizon(spark: org.apache.spark.sql.SparkSession,
                              path: String, touched: DataFrame,
                              seriesCols: Seq[String]): Unit = {
@@ -935,13 +862,9 @@ object Ts {
         .groupBy(seriesCols.map(col): _*)
         .agg(max("horizon_ts").as("horizon_ts"))
     }
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(root, HorizonDir)
-    val tmp = new org.apache.hadoop.fs.Path(root, HorizonDir + ".tmp")
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(marker)) fs.delete(marker, true)
-    fs.rename(tmp, marker)
+    val marker = new org.apache.hadoop.fs.Path(path, HorizonDir).toString
+    merged.write.mode("overwrite").parquet(marker + ".tmp")
+    graft.Fs.replace(spark, marker + ".tmp", marker)
   }
 
   /** The persisted ingest high-water marks of a store, if any delete
@@ -966,8 +889,9 @@ object Ts {
    * Compact a chunk store into a new store at `outPath`: decode every
    * point and re-encode exactly one sealed chunk per (series, window).
    * Streaming per-batch ingest (`StreamIngest.writeChunksPerBatch`)
-   * and salted chunkify legitimately leave several PARTIAL chunks per
-   * window; compaction restores the one-chunk-per-window shape —
+   * and appended `writeStore` batches legitimately leave several
+   * PARTIAL chunks per window; compaction restores the
+   * one-chunk-per-window shape —
    * Gorilla's background block finalization as a batch job. Because
    * encode is sort-based and deterministic, the compacted chunks are
    * byte-identical to a direct batch chunkify of the same points

@@ -189,7 +189,7 @@ class StreamIngestSpec extends AnyFunSuite {
       q.processAllAvailable()
       val store = graft.tsdb.Ts.readStore(spark, s"$path/store")
       // two PARTIAL chunks for the same (series, window) — the store
-      // contract salting already established — with exact stats each
+      // contract allows several per window — with exact stats each
       assert(store.count() == 2)
       assert(store.select("window_start").distinct().collect().map(_.getLong(0)).toSeq
         == Seq(w0))

@@ -302,6 +302,23 @@ class TsStoreSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq == kept.sorted)
   }
 
+  test("deleteFromStore raises, before touching a chunk, when the horizon swap fails") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.norename.impl", classOf[NoHorizonRenameFs].getName)
+    val ev = spark.read.parquet(s"$dir/events.parquet")
+    val series = Seq("user_id", "event_type")
+    val local = java.nio.file.Files.createTempDirectory("graft-norename").toString
+    val path = "norename:" + local
+    Ts.writeStore(Ts.chunkify(ev, series, "ts", "value"), path)
+    def chunkHashes = Ts.readStore(spark, local)
+      .select(md5(col("chunk"))).collect().map(_.getString(0)).sorted.toSeq
+    val before = chunkHashes
+    val err = intercept[java.io.IOException](
+      Ts.deleteFromStore(spark, path, 1704844800L + 43200L, 1705104000L + 21600L))
+    assert(err.getMessage.contains("_graft_horizon"), err.getMessage)
+    assert(chunkHashes == before)
+  }
+
   test("store mutations stay within their Spark job budget") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val ev = spark.read.parquet(s"$dir/events.parquet")
@@ -340,14 +357,20 @@ class TsStoreSpec extends AnyFunSuite {
   test("latest() is exact on a fragmented store (several chunks per window)") {
     val ev = spark.read.parquet(s"$dir/events.parquet")
     val series = Seq("user_id", "event_type")
-    // salted ingest: every hot window owns several chunks, and the
-    // chunk holding the true latest point is not distinguishable by
-    // window_start alone
-    val salted = Ts.chunkify(ev, series, "ts", "value", saltBuckets = 3)
-    val direct = Ts.latest(Ts.chunkify(ev, series, "ts", "value"), series)
-    assert(Ts.latest(salted, series).orderBy("user_id", "event_type")
+    // two halves appended as separate batches: every hot window owns
+    // several chunks, and the chunk holding the true latest point is
+    // not distinguishable by window_start alone
+    val path = java.nio.file.Files.createTempDirectory("graft-latest").toString
+    val half = pmod(xxhash64(col("event_id")), lit(2L))
+    Ts.writeStore(Ts.chunkify(ev.filter(half === 0), series, "ts", "value"), path)
+    Ts.writeStore(Ts.chunkify(ev.filter(half === 1), series, "ts", "value"),
+      path, mode = "append")
+    val fragged = Ts.readStore(spark, path).drop("window_date")
+    val direct = Ts.chunkify(ev, series, "ts", "value")
+    assert(fragged.count() > direct.count(), "ingest should be fragmented")
+    assert(Ts.latest(fragged, series).orderBy("user_id", "event_type")
         .collect().toSeq ==
-      direct.orderBy("user_id", "event_type").collect().toSeq)
+      Ts.latest(direct, series).orderBy("user_id", "event_type").collect().toSeq)
   }
 
   test("compressed-domain downsample equals the decode-everything resample") {
@@ -672,21 +695,6 @@ class TsStoreSpec extends AnyFunSuite {
     assert(overall < 25.0, s"compression ratio $overall%")
   }
 
-  test("salted chunkify splits hot windows but preserves the point set") {
-    import spark.implicits._
-    val pts = (0 until 5000).map(i =>
-      ("hot", new java.sql.Timestamp((1700000000L + i % 600) * 1000L), i / 100.0))
-      .toDF("series", "ts", "value")
-    val plain = Ts.chunkify(pts, Seq("series"), "ts", "value")
-    val salted = Ts.chunkify(pts, Seq("series"), "ts", "value", saltBuckets = 8)
-    assert(plain.count() == 1L)
-    assert(salted.count() > 1L) // hot window split into sub-chunks
-    val a = Ts.unpack(plain, Seq("series")).orderBy("ts", "v").collect().toSeq
-    val b = Ts.unpack(salted, Seq("series")).orderBy("ts", "v").collect().toSeq
-    assert(a.map(r => (r.getLong(1), r.getDouble(2))) ==
-      b.map(r => (r.getLong(1), r.getDouble(2))))
-  }
-
   test("typed facade round-trips Points through Chunks") {
     import spark.implicits._
     val pts = Seq(Point("cpu", 7200, 1.5), Point("cpu", 7260, 2.5),
@@ -725,4 +733,14 @@ class TsStoreSpec extends AnyFunSuite {
     assert(stats.forall(r => r.getAs[Long]("chunk_bytes") > 0))
     assert(stats.forall(r => r.getAs[Long]("raw_bytes") == 16 * r.getAs[Long]("n_points")))
   }
+}
+
+/** The local filesystem under the `norename` scheme, refusing every
+  * rename onto a path named `_graft_horizon`: a store's horizon swap
+  * fails while Spark's own commit renames still succeed. */
+class NoHorizonRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("norename:///")
+  override def getScheme: String = "norename"
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    dst.getName != "_graft_horizon" && super.rename(src, dst)
 }
